@@ -561,11 +561,40 @@ class LakeCatalog(spark: SparkSession, root: String) {
       (est, "shuffle", probe.join(build.hint("merge"), key))
   }
 
+  /** Spark's own inferred schema per parquet file set, keyed on each
+    * file's (path, size, mtime): a file rewritten in place misses the memo
+    * and is inferred (and fails) afresh. LRU-bounded: one entry per
+    * distinct file set read recently. */
+  private val schemaMemo = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[Seq[(String, Long, Long)], StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Seq[(String, Long, Long)], StructType]): Boolean =
+        size() > 64
+    })
+
+  /** `spark.read.parquet(paths)` without the schema-inference job when
+    * these exact files were read before. A file that cannot be stat'ed is
+    * left to Spark's read, which reports it. */
+  private def readParquet(paths: Seq[String]): DataFrame = {
+    val key = try paths.map { p =>
+      val a = Files.readAttributes(Paths.get(p),
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      (p, a.size(), a.lastModifiedTime().toMillis)
+    } catch { case _: java.io.IOException => return spark.read.parquet(paths: _*) }
+    Option(schemaMemo.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None =>
+        val df = spark.read.parquet(paths: _*)
+        schemaMemo.put(key, df.schema)
+        df
+    }
+  }
+
   private def readFiles(ns: String, table: String, files: Seq[String]): DataFrame = {
     val dir = tablePath(ns, table)
     if (files.isEmpty) // preserve schema for an empty snapshot
       spark.read.parquet(dir).limit(0)
-    else spark.read.parquet(files.map(f => s"$dir/$f"): _*)
+    else readParquet(files.map(f => s"$dir/$f"))
   }
 
   /** Time travel: the table as of snapshot `v` (deletion vectors committed
@@ -808,7 +837,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
 
   /** `files` scanned with the file name + row position the DV path keys on. */
   private def readFilesWithPos(dir: String, files: Seq[String]): DataFrame =
-    spark.read.parquet(files.map(f => s"$dir/$f"): _*)
+    readParquet(files.map(f => s"$dir/$f"))
       .select(col("*"),
         substring_index(col("_metadata.file_path"), "/", -1).as("__dv_file"),
         col("_metadata.row_index").as("__dv_pos"))

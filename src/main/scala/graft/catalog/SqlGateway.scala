@@ -189,12 +189,16 @@ class SqlGateway(spark: SparkSession, catalog: LakeCatalog) {
     * coincide BY CONTRACT, not by accident — a non-UTC deployment that
     * wants true wall-clock TIMESTAMP semantics would point the bare arm
     * at TimestampNTZType; the gateway's dialect keeps the reference's
-    * UTC-normalized behavior. */
+    * UTC-normalized behavior. TIMESTAMP_NTZ (the type SHOW CREATE TABLE
+    * prints for zone-less parquet timestamps) stays zone-less, so that DDL
+    * re-executes to the same schema. */
   private def parseType(t: String): DataType = t.trim.toUpperCase match {
     case s if s.contains("BIGINT") || s.contains("LONG") => LongType
     case s if s.contains("INT") => IntegerType
     case s if s.contains("DOUBLE") || s.contains("FLOAT") => DoubleType
     case s if s.contains("BOOL") => BooleanType
+    case s if s.contains("TIMESTAMP_NTZ") ||
+        s.contains("WITHOUT TIME ZONE") => TimestampNTZType
     case s if s.contains("TIMESTAMPTZ") ||
         s.contains("TIMESTAMP WITH") => TimestampType // tz-aware: UTC instants
     case s if s.contains("TIMESTAMP") => TimestampType // UTC-pinned session
@@ -681,84 +685,119 @@ class SqlGateway(spark: SparkSession, catalog: LakeCatalog) {
         catalog.insertRow(nsName, table, typed)
         Seq("Inserted 1 row successfully").toDF("status")
 
-      case countStar(alias, ns, table) if {
+      case countStar(alias, ns, table) =>
         // bare COUNT(*) — answered from manifest stats when every current
         // file has a recorded row count (metadata only, no scan: the exact
         // query shape the reference's MCP server paid a full table scan
         // for). Falls through to the Spark SQL path otherwise.
-        val nsName = Option(ns).getOrElse(resolveNs(table, "main"))
-        catalog.countStar(nsName, table).isDefined
-      } =>
-        val nsName = Option(ns).getOrElse(resolveNs(table, "main"))
-        import spark.implicits._
-        // column named as Spark SQL would name it, so the fast path is
-        // indistinguishable from the scan path to consumers
-        Seq(catalog.countStar(nsName, table).get)
-          .toDF(Option(alias).getOrElse("count(1)"))
-
-      case _ => // SELECT (and any other full SQL): Spark SQL over registered tables
-        // time-travel syntax: `FROM t VERSION AS OF n` registers the
-        // snapshot under an alias and rewrites the query to use it
-        val versionOf = """(?is)(\w+)\s+VERSION\s+AS\s+OF\s+(\d+)""".r
-        val preRewritten = versionOf.replaceAllIn(sql, m => {
-          val (t, v) = (m.group(1), m.group(2).toInt)
-          val alias = s"${t}_v$v"
-          catalog.loadSnapshot(resolveNs(t, "main"), t, v)
-            .createOrReplaceTempView(alias)
-          alias
-        })
-        // `FROM t TAG AS OF name` — the tag twin of VERSION AS OF
-        val tagOf = """(?is)(\w+)\s+TAG\s+AS\s+OF\s+(\w+)""".r
-        val tagRewritten = tagOf.replaceAllIn(preRewritten, m => {
-          val (t, tag) = (m.group(1), m.group(2))
-          val alias = s"${t}_tag_$tag"
-          catalog.loadTag(resolveNs(t, "main"), t, tag)
-            .createOrReplaceTempView(alias)
-          alias
-        })
-        // `FROM t CHANGES BETWEEN a AND b` — the change feed as a
-        // SELECT-able RELATION (Iceberg's changelog scan composed into
-        // arbitrary SQL: joins, aggregates, filters), not just the SHOW
-        // CHANGES verb. Same DV/equality-delete-aware changes() underneath;
-        // the verb form is matched earlier so only embedded FROM-position
-        // uses reach this rewrite.
-        val changesOf = """(?is)(\w+)\s+CHANGES\s+BETWEEN\s+(\d+)\s+AND\s+(\d+)""".r
-        val rewritten = changesOf.replaceAllIn(tagRewritten, m => {
-          val (t, a, b) = (m.group(1), m.group(2).toInt, m.group(3).toInt)
-          val alias = s"${t}_ch_${a}_$b"
-          catalog.changes(resolveNs(t, "main"), t, a, b)
-            .createOrReplaceTempView(alias)
-          alias
-        })
-        val tables = catalog.listTables()
-        tables.foreach { case (ns, t) =>
-          // qualified view always; bare name only when unambiguous — two
-          // namespaces holding the same table name must not silently shadow.
-          // loadRenamed (not load): after ALTER TABLE … RENAME COLUMN the
-          // physical schemas differ per generation; the rename-aware read
-          // reconciles them, and it falls back to the plain load when the
-          // table has no recorded rename.
-          // A directory listTables surfaces but load can't read (foreign
-          // non-parquet data parked in the warehouse) must not poison EVERY
-          // SELECT — skip it; referencing it still fails with
-          // TABLE_OR_VIEW_NOT_FOUND, which names the actual problem. A
-          // table that registered fine EARLIER in the session but fails to
-          // load NOW (transient IO, corrupt new generation) must drop its
-          // previous view on the way out: a load failure surfaces as
-          // TABLE_OR_VIEW_NOT_FOUND, never as silently-served stale data.
-          try {
-            catalog.loadRenamed(ns, t).createOrReplaceTempView(s"${ns}_$t")
-            if (tables.count(_._2 == t) == 1)
-              catalog.loadRenamed(ns, t).createOrReplaceTempView(t)
-          } catch {
-            case scala.util.control.NonFatal(_) =>
-              spark.catalog.dropTempView(s"${ns}_$t")
-              if (tables.count(_._2 == t) == 1) spark.catalog.dropTempView(t)
-          }
+        catalog.countStar(Option(ns).getOrElse(resolveNs(table, "main")), table) match {
+          // column named as Spark SQL would name it, so the fast path is
+          // indistinguishable from the scan path to consumers
+          case Some(n) => Seq(n).toDF(Option(alias).getOrElse("count(1)"))
+          case None => select(sql)
         }
-        spark.sql(rewritten)
+
+      case _ => select(sql) // SELECT (and any other full SQL)
     }
   }
+
+  /** Lower-cased names of the table views this gateway has registered in
+    * the session, so a view whose table has since been dropped or become
+    * ambiguous is dropped instead of serving its old snapshot. */
+  private val registeredViews = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private val identifier = """`([^`]+)`|(\w+)""".r
+
+  /** Identifier tokens of a SQL text, lower-cased: word runs plus the
+    * contents of backquoted names. A token inside a string literal or used
+    * as an alias only costs a spurious table load; a view cannot be
+    * referenced without its name appearing here. */
+  private def identifierTokens(sql: String): Set[String] =
+    identifier.findAllMatchIn(sql)
+      .map(m => Option(m.group(1)).getOrElse(m.group(2)).toLowerCase).toSet
+
+  /** Spark SQL over the catalog tables the statement names. */
+  private def select(sql: String): DataFrame = {
+    val aliases = scala.collection.mutable.Set.empty[String]
+    def aliasView(alias: String, df: DataFrame): String = {
+      df.createOrReplaceTempView(alias)
+      aliases += alias.toLowerCase
+      alias
+    }
+    // time-travel syntax: `FROM t VERSION AS OF n` registers the
+    // snapshot under an alias and rewrites the query to use it
+    val versionOf = """(?is)(\w+)\s+VERSION\s+AS\s+OF\s+(\d+)""".r
+    val preRewritten = versionOf.replaceAllIn(sql, m => {
+      val (t, v) = (m.group(1), m.group(2).toInt)
+      aliasView(s"${t}_v$v", catalog.loadSnapshot(resolveNs(t, "main"), t, v))
+    })
+    // `FROM t TAG AS OF name` — the tag twin of VERSION AS OF
+    val tagOf = """(?is)(\w+)\s+TAG\s+AS\s+OF\s+(\w+)""".r
+    val tagRewritten = tagOf.replaceAllIn(preRewritten, m => {
+      val (t, tag) = (m.group(1), m.group(2))
+      aliasView(s"${t}_tag_$tag", catalog.loadTag(resolveNs(t, "main"), t, tag))
+    })
+    // `FROM t CHANGES BETWEEN a AND b` — the change feed as a
+    // SELECT-able RELATION (Iceberg's changelog scan composed into
+    // arbitrary SQL: joins, aggregates, filters), not just the SHOW
+    // CHANGES verb. Same DV/equality-delete-aware changes() underneath;
+    // the verb form is matched earlier so only embedded FROM-position
+    // uses reach this rewrite.
+    val changesOf = """(?is)(\w+)\s+CHANGES\s+BETWEEN\s+(\d+)\s+AND\s+(\d+)""".r
+    val rewritten = changesOf.replaceAllIn(tagRewritten, m => {
+      val (t, a, b) = (m.group(1), m.group(2).toInt, m.group(3).toInt)
+      aliasView(s"${t}_ch_${a}_$b", catalog.changes(resolveNs(t, "main"), t, a, b))
+    })
+    // Only the tables the statement names are loaded, once each: a table
+    // is exposed as `ns_t` always and as bare `t` only when unambiguous —
+    // two namespaces holding the same table name must not silently shadow.
+    // loadRenamed (not load): after ALTER TABLE … RENAME COLUMN the
+    // physical schemas differ per generation; the rename-aware read
+    // reconciles them, and it falls back to the plain load when the table
+    // has no recorded rename.
+    val tokens = identifierTokens(rewritten)
+    val tables = catalog.listTables()
+    val bareCount = tables.groupMapReduce(_._2.toLowerCase)(_ => 1)(_ + _)
+    val current = tables.map { case (ns, t) =>
+      (ns, t) -> (s"${ns}_$t" +: (if (bareCount(t.toLowerCase) == 1) Seq(t) else Nil))
+    }
+    current.foreach { case ((ns, t), names) =>
+      // only the names the statement uses: each view registration is a
+      // Spark command of its own
+      val named = names.filter(n => tokens(n.toLowerCase))
+      if (named.nonEmpty) {
+        // A table that fails to load (foreign non-parquet data parked in
+        // the warehouse, transient IO, a corrupt new generation) drops any
+        // view registered for it earlier: referencing it fails with
+        // TABLE_OR_VIEW_NOT_FOUND, which names the actual problem, never
+        // serves stale data, and does not poison queries on other tables.
+        try {
+          val df = catalog.loadRenamed(ns, t)
+          named.foreach { n =>
+            df.createOrReplaceTempView(n)
+            registeredViews.add(n.toLowerCase)
+          }
+        } catch {
+          case scala.util.control.NonFatal(_) =>
+            names.foreach { n =>
+              spark.catalog.dropTempView(n)
+              registeredViews.remove(n.toLowerCase)
+            }
+        }
+      }
+    }
+    // a name registered earlier whose table was dropped, or whose bare
+    // name another namespace has since made ambiguous
+    val live = current.flatMap(_._2).map(_.toLowerCase).toSet ++ aliases
+    tokens.filter(n => !live(n) && registeredViews.remove(n))
+      .foreach(spark.catalog.dropTempView)
+    spark.sql(rewritten)
+  }
+
+  /** Normalizes a timestamp literal to ISO `yyyy-MM-ddTHH:mm:ss[…]`; a
+    * date-only literal takes midnight. */
+  private def isoDateTime(s: String): String =
+    (if (s.contains(" ") || s.contains("T")) s else s + " 00:00:00").replace(' ', 'T')
 
   private def coerce(v: Any, t: DataType): Any = (v, t) match {
     case (null, _) => null
@@ -767,13 +806,16 @@ class SqlGateway(spark: SparkSession, catalog: LakeCatalog) {
       // (the reference's timestamptz path, IcebergConnection.py:165-170);
       // bare literals parse as UTC explicitly — Timestamp.valueOf would
       // use the JVM default zone, shifting instants on non-UTC hosts
-      val txt = (if (s.contains(" ") || s.contains("T")) s else s + " 00:00:00")
-        .replace(' ', 'T')
+      val txt = isoDateTime(s)
       val instant =
         if (txt.matches(".*(Z|[+-]\\d{2}:\\d{2})$"))
           java.time.OffsetDateTime.parse(txt).toInstant
         else java.time.LocalDateTime.parse(txt).toInstant(java.time.ZoneOffset.UTC)
       java.sql.Timestamp.from(instant)
+    case (s: String, TimestampNTZType) =>
+      // zone-less wall-clock time: the type Spark reads parquet timestamps
+      // written without a time zone as
+      java.time.LocalDateTime.parse(isoDateTime(s))
     case (i: Int, LongType) => i.toLong
     case (i: Int, DoubleType) => i.toDouble
     case (l: Long, DoubleType) => l.toDouble
