@@ -10,11 +10,16 @@ import scala.jdk.CollectionConverters._
   * (list namespaces / list tables / describe / create / append,
   * IcebergConnection.py:41-77 and 133-216) over a parquet warehouse.
   *
-  * Layout: `<root>/<namespace>/<table>/ *.parquet` plus a `_meta.json`
-  * sidecar per table (schema echo + properties + partition spec), keeping an
-  * Iceberg-shaped metadata surface so a real Iceberg catalog can be swapped
-  * in where the runtime jars exist. A flat directory of `<name>.parquet`
-  * files (the test data layout) is exposed as the single namespace `main`.
+  * Layout: `<root>/<namespace>/<table>/ *.parquet` plus per-table JSON
+  * sidecars beside the table directory — the commit log, refs, manifest
+  * file stats, deletion vectors, equality deletes, column stats,
+  * histograms, blooms, NDV sketches, renames, table meta, hidden spec and
+  * schema evolution — keeping an Iceberg-shaped metadata surface so a real
+  * Iceberg catalog can be swapped in where the runtime jars exist. The kind
+  * table, file names, IO and JSON shapes of those sidecars live in
+  * [[Sidecar]]; this class reads and writes them only through it. A flat
+  * directory of `<name>.parquet` files (the test data layout) is exposed as
+  * the single namespace `main`.
   *
   * Appends are whole parquet files added to the table directory — the same
   * commit granularity as Iceberg's append snapshots (files are immutable,
@@ -74,8 +79,12 @@ class LakeCatalog(spark: SparkSession, root: String) {
     if (isFlatWarehouse && ns == "main") s"$root/$table.parquet"
     else s"$root/$ns/$table"
 
+  /** The `kind` sidecar file of `ns.table`. */
+  private def sidecar(ns: String, table: String, kind: Sidecar.Kind): Path =
+    Sidecar.path(rootPath.resolve(ns), table, kind)
+
   // ---------------------------------------------------------------- snapshots
-  // Iceberg-shaped commit log: `<table>_snapshots.json` holds one snapshot
+  // Iceberg-shaped commit log: the `snapshots` sidecar holds one snapshot
   // per line `{"v":N,"files":[...]}` (paths relative to the table dir).
   // Data files are immutable; every mutation (append / delete / update /
   // merge / compact) writes NEW files and commits a new file list, so every
@@ -83,8 +92,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
   // of an older snapshot are never broken. Snapshot-logged tables are read
   // via their current file list, not the directory listing.
 
-  private def snapshotLogPath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_snapshots.json")
+  private def snapshotLog(ns: String, table: String): Seq[Sidecar.LogEntry] =
+    Sidecar.log(sidecar(ns, table, Sidecar.Snapshots))
 
   private def listParquet(dir: Path): Seq[String] =
     if (!Files.exists(dir) || !Files.isDirectory(dir)) Seq.empty
@@ -92,20 +101,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
       .filter(_.endsWith(".parquet")).sorted
 
   /** All committed snapshots, oldest first: (version, files). */
-  def snapshots(ns: String, table: String): Seq[(Int, Seq[String])] = {
-    val p = snapshotLogPath(ns, table)
-    if (!Files.exists(p)) Seq.empty
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty).map { line =>
-        val j = JsonMethods.parse(line)
-        val JInt(v) = (j \ "v"): @unchecked
-        val files = (j \ "files").asInstanceOf[JArray].arr.collect { case JString(f) => f }
-        (v.toInt, files)
-      }
-    }
-  }
+  def snapshots(ns: String, table: String): Seq[(Int, Seq[String])] =
+    snapshotLog(ns, table).map(e => (e.v, e.files))
 
   /** Iceberg `$history` metadata table: every snapshot with its parent
     * pointer and whether it is an ancestor of the CURRENT head — the lineage
@@ -117,20 +114,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * (version, parent, n_rows, is_current_ancestor) — n_rows from the
     * manifest-stats sidecar, no data IO. */
   def history(ns: String, table: String): Seq[(Int, Int, Long, Boolean)] = {
-    val p = snapshotLogPath(ns, table)
-    if (!Files.exists(p)) return Seq.empty
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val entries = Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty).map { line =>
-      val j = JsonMethods.parse(line)
-      val JInt(v) = (j \ "v"): @unchecked
-      val parent = (j \ "parent") match {
-        case JInt(x) => x.toInt
-        case _ => v.toInt - 1
-      }
-      val files = (j \ "files").asInstanceOf[JArray].arr.collect { case JString(f) => f }
-      (v.toInt, parent, files)
-    }
+    val entries = snapshotLog(ns, table).map(e => (e.v, e.parent, e.files))
+    if (entries.isEmpty) return Seq.empty
     val stats = fileStats(ns, table)
     val byV = entries.map(e => e._1 -> e._2).toMap
     val head = refs(ns, table).getOrElse("main",
@@ -152,9 +137,11 @@ class LakeCatalog(spark: SparkSession, root: String) {
     // writer that planned its commit against snapshot E must fail if the
     // table moved — committing a COW rewrite computed from a stale file
     // list would silently ERASE every row a concurrent writer added. The
-    // check-and-append is atomic under the single-process lock the flat
-    // warehouse assumes; a real catalog does the same CAS against its
-    // metastore. Failed commits leave their staged files unreferenced —
+    // check and the append below are NOT atomic: nothing serializes
+    // commits, so two threads committing to one table at once can both
+    // pass the check (a real catalog does this CAS against its metastore;
+    // the concurrent-writer harness of ROADMAP item 3 is where that gets
+    // fixed). Failed commits leave their staged files unreferenced —
     // exactly the debris [[removeOrphans]] exists to sweep.
     expectedBase.foreach { e =>
       val head = refs(ns, table).getOrElse("main",
@@ -174,17 +161,13 @@ class LakeCatalog(spark: SparkSession, root: String) {
     // data-commit and replay-fence are then one atomic append — a crash can
     // never leave the batch committed but unfenced (the window a separate
     // fence file would have).
-    val batchField = batch.map(b => s""""batch":$b,""").getOrElse("")
     // MOR commits carry a unique token shared with the DV lines they wrote
     // BEFORE this append: a DV line is live only when its token matches the
     // log line that actually committed its version — so sidecar lines from
     // a failed CAS (whose version number a LATER transaction reuses) stay
     // permanently inert instead of becoming someone else's deletes.
-    val tokenField = token.map(t => s""""token":"$t",""").getOrElse("")
-    val line = files.sorted.map(f => s""""$f"""")
-      .mkString(s"""{"v":$v,"parent":$parent,$batchField$tokenField"files":[""", ",", "]}\n")
-    Files.writeString(snapshotLogPath(ns, table), line,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    Sidecar.append(sidecar(ns, table, Sidecar.Snapshots),
+      Seq(Sidecar.logLine(v, parent, batch, token, files.sorted)))
     // ref bookkeeping (branches — see the "branch refs" section): a branch
     // commit adds its snapshot to the SAME immutable log but moves only its
     // own ref, pinning main where it was; a main commit advances the main
@@ -207,40 +190,19 @@ class LakeCatalog(spark: SparkSession, root: String) {
   }
 
   // --------------------------------------------------------- branch refs
-  // `<table>_refs.json`: {"main": v, "<branch>": v'} — the Iceberg
+  // The `refs` sidecar: {"main": v, "<branch>": v'} — the Iceberg
   // branch/tag surface (SnapshotRef) that enables WAP (write-audit-publish):
   // stage a commit on a branch, audit it in isolation, fast-forward main
   // when it passes. Absent sidecar = main is the newest snapshot (the
   // backward-compatible default every pre-branch table uses).
 
-  private def refsPath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_refs.json")
-
   /** All named refs (branch → snapshot version). Includes "main" once any
     * branch has existed. */
-  def refs(ns: String, table: String): Map[String, Int] = {
-    val p = refsPath(ns, table)
-    if (!Files.exists(p)) Map.empty
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      JsonMethods.parse(Files.readString(p)) match {
-        case JObject(fs) => fs.collect { case (k, JInt(v)) => k -> v.toInt }.toMap
-        case _ => Map.empty
-      }
-    }
-  }
+  def refs(ns: String, table: String): Map[String, Int] =
+    Sidecar.refs(sidecar(ns, table, Sidecar.Refs))
 
-  private def writeRefs(ns: String, table: String, m: Map[String, Int]): Unit = {
-    val body = m.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val p = refsPath(ns, table)
-    // atomic replace: readers never observe a torn refs file
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeRefs(ns: String, table: String, m: Map[String, Int]): Unit =
+    Sidecar.replace(sidecar(ns, table, Sidecar.Refs), Iterator(Sidecar.refsLine(m)))
 
   /** Stage an append on `branch` (created at main's head if new): the
     * snapshot is committed to the log but main does not move — main readers
@@ -315,16 +277,13 @@ class LakeCatalog(spark: SparkSession, root: String) {
   }
 
   // ------------------------------------------------------- column stats
-  // `<table>_colstats.json`: per-column (n_rows, n_nulls, ndv, min, max) —
+  // The `colstats` sidecar: per-column (n_rows, n_nulls, ndv, min, max) —
   // the ANALYZE TABLE surface (Iceberg puffin/Theta analog). Stats are
   // computed in ONE distributed aggregate pass and only the |cols|-row
   // result crosses to the driver. Exact NDV here (countDistinct) because
   // the oracle needs exactness at test scale; at 100 TB the same pass runs
   // approx_count_distinct — mergeable HLL, one Expand-free scan — and
   // nothing downstream changes shape.
-
-  private def colStatsPath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_colstats.json")
 
   /** Compute and persist per-column stats for `cols`. min/max are stored as
     * strings (typed rendering is the caller's contract — integral and
@@ -340,16 +299,12 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
     def s(v: Any): String = Option(v).map(_.toString).getOrElse("")
     val n = row.getAs[Long]("__n")
-    val lines = cols.map { c =>
-      s"""{"col":"$c","n_rows":$n,"n_nulls":${row.getAs[Long](s"${c}__nulls")},"ndv":${row.getAs[Long](s"${c}__ndv")},"min":"${s(row.getAs[Any](s"${c}__min"))}","max":"${s(row.getAs[Any](s"${c}__max"))}"}"""
-    }.mkString("", "\n", "\n")
-    Files.writeString(colStatsPath(ns, table), lines)
+    Sidecar.replace(sidecar(ns, table, Sidecar.ColStats), cols.iterator.map { c =>
+      Sidecar.colStatLine(Sidecar.ColStat(c, n, row.getAs[Long](s"${c}__nulls"),
+        row.getAs[Long](s"${c}__ndv"), s(row.getAs[Any](s"${c}__min")),
+        s(row.getAs[Any](s"${c}__max"))))
+    })
   }
-
-  /** The persisted stats as a DataFrame (SHOW STATS surface): one row per
-    * analyzed column. Served from the sidecar — no data scan. */
-  private def histPath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_hist.json")
 
   /** Banded equi-height histogram (the CBO statistic ANALYZE's min/max/ndv
     * can't provide — selectivity of range predicates on skewed columns).
@@ -359,7 +314,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * equal to n/B up to band granularity, boundaries always on band edges
     * (the deterministic banded construction production ANALYZE uses at
     * scale; an exact equi-height would need a global value sort). Persisted
-    * to a `<table>_hist.json` sidecar; [[showHistogram]] answers from
+    * to the `hist` sidecar; [[showHistogram]] answers from
     * metadata alone. Only B rows reach the driver. */
   def analyzeHistogram(ns: String, table: String, colName: String,
                        buckets: Int = 10, bandW: Double = 100.0): Unit = {
@@ -379,56 +334,32 @@ class LakeCatalog(spark: SparkSession, root: String) {
         sum(col("c")).as("rows"))
       .orderBy("bucket")
       .collect() // B rows — metadata-scale
-    val lines = rows.map { r =>
-      val lo = r.getAs[Long]("lo_band") * bandW
-      val hi = (r.getAs[Long]("hi_band") + 1) * bandW
-      s"""{"column":"$colName","bucket":${r.getAs[Int]("bucket")},"lo":$lo,"hi":$hi,"rows":${r.getAs[Long]("rows")}}"""
-    }.mkString("", "\n", "\n")
+    val fresh = rows.map { r =>
+      Sidecar.HistBucket(colName, r.getAs[Int]("bucket"),
+        r.getAs[Long]("lo_band") * bandW, (r.getAs[Long]("hi_band") + 1) * bandW,
+        r.getAs[Long]("rows"))
+    }
     // re-analyze replaces this column's lines, keeps other columns'
-    val existing = if (Files.exists(histPath(ns, table)))
-      Files.readAllLines(histPath(ns, table)).asScala
-        .filterNot(_.contains(s""""column":"$colName"""")).toSeq
-    else Seq.empty
-    Files.writeString(histPath(ns, table),
-      (existing ++ lines.split('\n')).mkString("", "\n", "\n"))
+    val p = sidecar(ns, table, Sidecar.Hist)
+    val existing = Sidecar.hist(p).filterNot(_.column == colName)
+    Sidecar.replace(p, (existing ++ fresh).iterator.map(Sidecar.histLine))
   }
 
   /** The persisted histogram as (bucket, lo, hi, rows) — pure metadata. */
   def showHistogram(ns: String, table: String,
-                    colName: String): Seq[(Int, Double, Double, Long)] = {
-    val p = histPath(ns, table)
-    if (!Files.exists(p)) return Seq.empty
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty).flatMap { line =>
-      val j = JsonMethods.parse(line)
-      val JString(c) = (j \ "column"): @unchecked
-      if (c != colName) None
-      else {
-        def d(f: String): Double = (j \ f) match {
-          case JDouble(x) => x
-          case JInt(x) => x.toDouble
-          case _ => Double.NaN
-        }
-        val JInt(b) = (j \ "bucket"): @unchecked
-        val JInt(r) = (j \ "rows"): @unchecked
-        Some((b.toInt, d("lo"), d("hi"), r.toLong))
-      }
-    }.sortBy(_._1)
-  }
+                    colName: String): Seq[(Int, Double, Double, Long)] =
+    Sidecar.hist(sidecar(ns, table, Sidecar.Hist))
+      .filter(_.column == colName)
+      .map(b => (b.bucket, b.lo, b.hi, b.rows))
+      .sortBy(_._1)
 
+  /** The persisted stats as a DataFrame (SHOW STATS surface): one row per
+    * analyzed column. Served from the sidecar — no data scan. */
   def showStats(ns: String, table: String): DataFrame = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val p = colStatsPath(ns, table)
+    val p = sidecar(ns, table, Sidecar.ColStats)
     require(Files.exists(p), s"no stats for $ns.$table — run analyzeTable")
-    val rows = Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty).map { l =>
-      val j = JsonMethods.parse(l)
-      def str(f: String) = (j \ f) match { case JString(x) => x; case _ => "" }
-      def num(f: String) = (j \ f) match { case JInt(x) => x.toLong; case _ => 0L }
-      Row(str("col"), num("n_rows"), num("n_nulls"), num("ndv"),
-        str("min"), str("max"))
-    }
+    val rows = Sidecar.colStats(p).map(c =>
+      Row(c.col, c.nRows, c.nNulls, c.ndv, c.min, c.max))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), StructType(Seq(
       StructField("column", StringType, nullable = false),
       StructField("n_rows", LongType, nullable = false),
@@ -440,36 +371,18 @@ class LakeCatalog(spark: SparkSession, root: String) {
 
   /** Analyzed row count for `colName` from the stats sidecar (None when the
     * column was never analyzed). Metadata only. */
-  def statsRowCount(ns: String, table: String, colName: String): Option[Long] = {
-    val p = colStatsPath(ns, table)
-    if (!Files.exists(p)) return None
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    Files.readAllLines(p).asScala.filter(_.nonEmpty).flatMap { l =>
-      val j = JsonMethods.parse(l)
-      ((j \ "col"), (j \ "n_rows")) match {
-        case (JString(c), JInt(n)) if c == colName => Some(n.toLong)
-        case _ => None
-      }
-    }.headOption
-  }
+  def statsRowCount(ns: String, table: String, colName: String): Option[Long] =
+    Sidecar.colStats(sidecar(ns, table, Sidecar.ColStats))
+      .find(_.col == colName).map(_.nRows)
 
   /** Columns covered by the colstats sidecar (ANALYZE coverage) — metadata
     * only; the re-ANALYZE policy reads this to know WHAT to refresh. */
-  def analyzedColumns(ns: String, table: String): Seq[String] = {
-    val p = colStatsPath(ns, table)
-    if (!Files.exists(p)) return Seq.empty
-    Files.readAllLines(p).asScala.toSeq.flatMap(l =>
-      """"col":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1))).distinct
-  }
+  def analyzedColumns(ns: String, table: String): Seq[String] =
+    Sidecar.colStats(sidecar(ns, table, Sidecar.ColStats)).map(_.col).distinct
 
   /** Columns with a histogram sidecar — metadata only. */
-  def histogramColumns(ns: String, table: String): Seq[String] = {
-    val p = histPath(ns, table)
-    if (!Files.exists(p)) return Seq.empty
-    Files.readAllLines(p).asScala.toSeq.flatMap(l =>
-      """"column":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1))).distinct
-  }
+  def histogramColumns(ns: String, table: String): Seq[String] =
+    Sidecar.hist(sidecar(ns, table, Sidecar.Hist)).map(_.column).distinct
 
   /** Auto re-ANALYZE policy (r10 — the stats lifecycle's missing verb):
     * when the CURRENT manifest row count has grown to `maxFactorPct`% or
@@ -723,7 +636,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
   }
 
   // ---------------------------------------------- merge-on-read deletes
-  // `<table>_dv.json`: one line per MOR delete commit —
+  // The `dv` sidecar: one line per MOR delete commit —
   // {"v":V,"file":F,"pos":[...]} (Iceberg v3 deletion vectors, simplified:
   // per-file row-position lists keyed by the snapshot that wrote them). A
   // MOR delete commits a snapshot whose FILE LIST IS UNCHANGED; readers at
@@ -737,10 +650,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
   // current reads (their filenames never match the scan) but keep
   // historical snapshots exact — time travel needs no special casing.
 
-  private def dvPath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_dv.json")
-
-  /** One parsed DV sidecar line. Two payload shapes (VERDICT r12 #4):
+  /** A parsed DV sidecar line ([[Sidecar.DvLine]]). Two payload shapes (VERDICT r12 #4):
     * INLINE — `file` + `pos` carry the (file, position) pairs in the JSON
     * line itself (small deletes: the payload is Iceberg-commit-metadata
     * scale); REF — `ref` names a DISTRIBUTED parquet delete-file directory
@@ -749,37 +659,11 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * and scan-relevance checks stay metadata-only. A DELETE matching
     * billions of rows commits via REF without the row payload ever
     * transiting the driver — the Iceberg delete-file design. */
-  private case class DvLine(v: Int, token: Option[String], file: String,
-                            ps: Seq[Long], ref: Option[String],
-                            nfiles: Map[String, Long]) {
-    def files: Set[String] = if (ref.isDefined) nfiles.keySet else Set(file)
-  }
+  private type DvLine = Sidecar.DvLine
 
   /** Parsed DV lines (inline and ref shapes). */
-  private def dvEntries(ns: String, table: String): Seq[DvLine] = {
-    val p = dvPath(ns, table)
-    if (!Files.exists(p)) Seq.empty
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty).map { l =>
-        val j = JsonMethods.parse(l)
-        val v = (j \ "v") match { case JInt(x) => x.toInt; case _ => Int.MaxValue }
-        val tok = (j \ "token") match { case JString(x) => Some(x); case _ => None }
-        val f = (j \ "file") match { case JString(x) => x; case _ => "" }
-        val ps = (j \ "pos") match {
-          case JArray(a) => a.collect { case JInt(x) => x.toLong }
-          case _ => Seq.empty[Long]
-        }
-        val ref = (j \ "ref") match { case JString(x) => Some(x); case _ => None }
-        val nf = (j \ "nfiles") match {
-          case JObject(fs) => fs.collect { case (k, JInt(n)) => k -> n.toLong }.toMap
-          case _ => Map.empty[String, Long]
-        }
-        DvLine(v, tok, f, ps, ref, nf)
-      }
-    }
-  }
+  private def dvEntries(ns: String, table: String): Seq[DvLine] =
+    Sidecar.dv(sidecar(ns, table, Sidecar.Dv))
 
   /** DV lines LIVE at `atV` under the token-orphan rule (see
     * [[liveDvPairs]]) — both payload shapes. */
@@ -802,16 +686,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
 
   /** Commit token recorded in each snapshot-log line (absent on non-MOR
     * commits and pre-token history). */
-  private def snapshotTokens(ns: String, table: String): Map[Int, String] = {
-    val p = snapshotLogPath(ns, table)
-    if (!Files.exists(p)) Map.empty
-    else Files.readAllLines(p).asScala.filter(_.nonEmpty).flatMap { line =>
-      for {
-        v <- """"v":(\d+)""".r.findFirstMatchIn(line).map(_.group(1).toInt)
-        t <- """"token":"([^"]+)"""".r.findFirstMatchIn(line).map(_.group(1))
-      } yield v -> t
-    }.toMap
-  }
+  private def snapshotTokens(ns: String, table: String): Map[Int, String] =
+    snapshotLog(ns, table).flatMap(e => e.token.map(e.v -> _)).toMap
 
   /** DV (file, pos) pairs LIVE at version `atV`. A line is live iff its
     * version committed at or before `atV` AND — when the line carries a
@@ -900,7 +776,6 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * crosses the driver on the ref arm); writes nothing when empty. */
   private def writeDvPayload(ns: String, table: String, hits: DataFrame,
                              nextV: Int, tok: String): Array[(String, Long)] = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val payload = hits.select(col("__dv_file"), col("__dv_pos"))
     val alreadyPinned = payload.queryExecution.analyzed.collectLeaves()
       .forall(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
@@ -917,14 +792,12 @@ class LakeCatalog(spark: SparkSession, root: String) {
       fs.nonEmpty && fs.forall(stats.contains) &&
         fs.flatMap(stats.get).sum <= dvInlineMax
     }
-    def writeInline(rows: Array[(String, Seq[Long])]): Unit = {
-      val lines = rows.filter(_._2.nonEmpty).map { case (f, ps) =>
-        s"""{"v":$nextV,"token":"$tok","file":"$f","pos":[${ps.mkString(",")}]}"""
-      }.mkString("", "\n", "\n")
-      Files.writeString(dvPath(ns, table), lines,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    def writeLines(lines: Seq[DvLine]): Unit =
+      Sidecar.append(sidecar(ns, table, Sidecar.Dv), lines.map(Sidecar.dvLine))
+    def writeInline(rows: Array[(String, Seq[Long])]): Unit =
+      writeLines(rows.toSeq.filter(_._2.nonEmpty).map { case (f, ps) =>
+        Sidecar.DvLine(nextV, Some(tok), f, ps, None, Map.empty)
+      })
     if (inlineCertain) {
       // ONE action: counts and complete sorted positions together
       val agg = pinned.groupBy(col("__dv_file"))
@@ -957,13 +830,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
         // without a committed tokened line are orphan-sweep debris.
         val refRel = s"$ns/${table}_deletes/dv-$tok"
         pinned.write.parquet(s"$root/$refRel")
-        val line =
-          s"""{"v":$nextV,"token":"$tok","ref":"${esc(refRel)}","nfiles":{${
-            counts.map { case (f, c) => "\"" + esc(f) + "\":" + c }.mkString(",")
-          }}}""" + "\n"
-        Files.writeString(dvPath(ns, table), line,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
+        writeLines(Seq(Sidecar.DvLine(nextV, Some(tok), "", Seq.empty,
+          Some(refRel), counts.toMap)))
         counts
       }
     }
@@ -1065,7 +933,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
   }
 
   // ------------------------------------------------ equality deletes (v2)
-  // `<table>_eqdel.json`: one line per equality-delete commit —
+  // The `eqdel` sidecar: one line per equality-delete commit —
   // {"v":V,"token":T,"col":C,"vals":[...],"files":{F:N,...}} (Iceberg v2
   // equality delete files, simplified to a key-value list per commit). This
   // is the STREAMING writer's delete shape — a CDC producer (Flink) knows
@@ -1083,10 +951,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
   // string keys — the key shapes a CDC feed carries); NULL keys never
   // match (SQL equality semantics).
 
-  private def eqDelPath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_eqdel.json")
-
-  /** One parsed equality-delete line. `v` is the LIVENESS version (the
+  /** One parsed equality-delete line ([[Sidecar.EqDelete]]). `v` is the LIVENESS version (the
     * commit that wrote the line — the [[liveDvPairs]] rules apply); `scope`
     * is the SEQUENCE-NUMBER bound (the delete applies to files committed
     * strictly before it). They start equal; expiry folds and clone
@@ -1098,40 +963,19 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * reads (a folded line scoped by version number alone would go inert —
     * resurrecting its deletes — once every surviving file re-registers at
     * the surviving version). */
-  private case class EqDelete(v: Int, token: Option[String], col: String,
-                              vals: Seq[String], fileCounts: Map[String, Long],
-                              scope: Int, applies: Option[Seq[String]],
-                              ref: Option[String] = None)
+  private type EqDelete = Sidecar.EqDelete
 
-  private def eqDelEntries(ns: String, table: String): Seq[EqDelete] = {
-    val p = eqDelPath(ns, table)
-    if (!Files.exists(p)) Seq.empty
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty).map { l =>
-        val j = JsonMethods.parse(l)
-        val v = (j \ "v") match { case JInt(x) => x.toInt; case _ => Int.MaxValue }
-        val tok = (j \ "token") match { case JString(x) => Some(x); case _ => None }
-        val c = (j \ "col") match { case JString(x) => x; case _ => "" }
-        val vs = (j \ "vals") match {
-          case JArray(a) => a.collect { case JString(x) => x }
-          case _ => Seq.empty[String]
-        }
-        val fc = (j \ "files") match {
-          case JObject(fs) => fs.collect { case (f, JInt(n)) => f -> n.toLong }.toMap
-          case _ => Map.empty[String, Long]
-        }
-        val sc = (j \ "scope") match { case JInt(x) => x.toInt; case _ => v }
-        val ap = (j \ "applies") match {
-          case JArray(a) => Some(a.collect { case JString(x) => x })
-          case _ => None
-        }
-        val ref = (j \ "ref") match { case JString(x) => Some(x); case _ => None }
-        EqDelete(v, tok, c, vs, fc, sc, ap, ref)
-      }
-    }
-  }
+  private def eqDelEntries(ns: String, table: String): Seq[EqDelete] =
+    Sidecar.eqDel(sidecar(ns, table, Sidecar.EqDel))
+
+  /** Append one freshly committed equality-delete line (no scope: it is
+    * the line's own version). */
+  private def appendEqDelete(ns: String, table: String, v: Int, tok: String,
+                             keyCol: String, vals: Seq[String],
+                             ref: Option[String],
+                             hits: Array[(String, Long)]): Unit =
+    Sidecar.append(sidecar(ns, table, Sidecar.EqDel), Seq(Sidecar.eqDelLine(
+      Sidecar.EqDelete(v, Some(tok), keyCol, vals, hits.toMap, None, None, ref))))
 
   /** The (key, applicable file basename) pairs of equality-delete entries,
     * restricted to `inScan` — scope expanded per file: explicit `applies`
@@ -1146,7 +990,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
       val files = e.applies match {
         case Some(fs) => fs.filter(inScan)
         case None => inScan.toSeq.filter(f =>
-          av.getOrElse(f, Int.MaxValue) < e.scope)
+          av.getOrElse(f, Int.MaxValue) < e.scopeV)
       }
       for (f <- files; k <- e.vals) yield (e.col, k, f)
     }.distinct
@@ -1229,7 +1073,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     refs.flatMap { e =>
       val files = e.applies match {
         case Some(fs) => fs.filter(inScan).toSet
-        case None => inScan.filter(f => av.getOrElse(f, Int.MaxValue) < e.scope)
+        case None => inScan.filter(f => av.getOrElse(f, Int.MaxValue) < e.scopeV)
       }
       if (files.isEmpty) None else Some((e, files))
     }
@@ -1272,14 +1116,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
       .sortBy(_._1)
     val nextV = snapshots(ns, table).map(_._1).maxOption.getOrElse(-1) + 1
     val tok = java.util.UUID.randomUUID().toString
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val line =
-      s"""{"v":$nextV,"token":"$tok","col":"${esc(keyCol)}","vals":[${
-        keyStrs.map(k => "\"" + esc(k) + "\"").mkString(",")}],"files":{${
-        hits.map { case (f, n) => "\"" + esc(f) + "\":" + n }.mkString(",")}}}""" + "\n"
-    Files.writeString(eqDelPath(ns, table), line,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    appendEqDelete(ns, table, nextV, tok, keyCol, keyStrs, None, hits)
     val committed = commitSnapshot(ns, table, cur, expectedBase = Some(v),
       token = Some(tok))
     require(committed == nextV,
@@ -1324,13 +1161,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val tok = java.util.UUID.randomUUID().toString
     val refRel = s"$ns/${table}_deletes/eq-$tok"
     keyDf.write.parquet(s"$root/$refRel")
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val line =
-      s"""{"v":$nextV,"token":"$tok","col":"${esc(keyCol)}","ref":"${esc(refRel)}","files":{${
-        hits.map { case (f, n) => "\"" + esc(f) + "\":" + n }.mkString(",")}}}""" + "\n"
-    Files.writeString(eqDelPath(ns, table), line,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    appendEqDelete(ns, table, nextV, tok, keyCol, Seq.empty, Some(refRel), hits)
     val committed = commitSnapshot(ns, table, cur, expectedBase = Some(v),
       token = Some(tok))
     require(committed == nextV,
@@ -1454,16 +1285,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val nextV = snapshots(ns, table).map(_._1).maxOption.getOrElse(-1) + 1
     val tok = java.util.UUID.randomUUID().toString
     // … tokened equality-delete line second …
-    if (keyStrs.nonEmpty) {
-      def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-      val line =
-        s"""{"v":$nextV,"token":"$tok","col":"${esc(key)}","vals":[${
-          keyStrs.map(k => "\"" + esc(k) + "\"").mkString(",")}],"files":{${
-          hits.map { case (f, n) => "\"" + esc(f) + "\":" + n }.mkString(",")}}}""" + "\n"
-      Files.writeString(eqDelPath(ns, table), line,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    if (keyStrs.nonEmpty)
+      appendEqDelete(ns, table, nextV, tok, key, keyStrs, None, hits)
     // … and the CAS'd commit (data + fence + token, one log line) last
     val committed = commitSnapshot(ns, table, cur ++ deltaFiles,
       batch = batch, expectedBase = Some(v), token = Some(tok))
@@ -1527,21 +1350,18 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * maps, filesMeta) is unchanged because dropped lines were unreachable.
     * Returns (lines_before, lines_after). */
   def rewriteManifests(ns: String, table: String): (Int, Int) = {
-    val p = fileStatsPath(ns, table)
+    val p = sidecar(ns, table, Sidecar.FileStats)
     if (!Files.exists(p)) return (0, 0)
-    val lines = Files.readAllLines(p).asScala.filter(_.nonEmpty).toSeq
+    val lines = Sidecar.fileStats(p)
     val referenced = snapshots(ns, table).flatMap(_._2).toSet
-    val kept = lines.zipWithIndex
-      .flatMap { case (line, i) =>
-        referenced.find(f => line.contains(s""""file":"$f""""))
-          .map(f => (f, i, line))
-      }
-      .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }
-      .toSeq.sortBy(_._2).map(_._3)
-    val tmp = p.resolveSibling(s"${p.getFileName}.tmp")
-    Files.writeString(tmp, kept.mkString("", "\n", "\n"))
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // the last line per referenced file (toMap keeps the later index), in
+    // file order
+    val last = lines.zipWithIndex.collect {
+      case (l, i) if referenced(l.file) => l.file -> i }.toMap
+    val kept = lines.zipWithIndex.collect {
+      case (l, i) if last.get(l.file).contains(i) => l.raw
+    }
+    Sidecar.replace(p, kept.iterator)
     (lines.size, kept.size)
   }
 
@@ -1730,14 +1550,11 @@ class LakeCatalog(spark: SparkSession, root: String) {
   }
 
   // ------------------------------------------------ manifest stats sidecar
-  // `<table>_filestats.json`: one line per data file ever written,
+  // The `filestats` sidecar: one line per data file ever written,
   // {"file":"part-...","rows":N} — written at commit time from the parquet
   // footer (the write-side analog of Iceberg manifest entries). Files from
   // before this sidecar existed simply have no entry; readers fall back to
   // a footer-level scan for those.
-
-  private def fileStatsPath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_filestats.json")
 
   /** Row count from the parquet footer — pure metadata IO, no Spark job. */
   private def footerRowCount(file: Path): Long = {
@@ -1813,63 +1630,25 @@ class LakeCatalog(spark: SparkSession, root: String) {
       val lines = files.map { f =>
         val (rows, bounds) = footerInfo(dir.resolve(f))
         total += rows
-        val b = bounds.toSeq.sortBy(_._1)
-          .map { case (c, (lo, hi)) => s""""$c":[$lo,$hi]""" }
-          .mkString("{", ",", "}")
-        s"""{"file":"$f","rows":$rows,"bounds":$b}\n"""
-      }.mkString
-      Files.writeString(fileStatsPath(ns, table), lines,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+        Sidecar.fileStatLine(f, rows, bounds.toSeq.sortBy(_._1))
+      }
+      Sidecar.append(sidecar(ns, table, Sidecar.FileStats), lines)
       total
     }
 
   /** All recorded per-file row counts for this table. */
-  private def fileStats(ns: String, table: String): Map[String, Long] = {
-    val p = fileStatsPath(ns, table)
-    if (!Files.exists(p)) Map.empty
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      Files.readAllLines(p).asScala.filter(_.nonEmpty).map { line =>
-        val j = JsonMethods.parse(line)
-        val JString(f) = (j \ "file"): @unchecked
-        val JInt(n) = (j \ "rows"): @unchecked
-        f -> n.toLong
-      }.toMap
-    }
-  }
+  private def fileStats(ns: String, table: String): Map[String, Long] =
+    Sidecar.fileStats(sidecar(ns, table, Sidecar.FileStats))
+      .flatMap(s => s.rows.map(s.file -> _)).toMap
 
   /** Per-file numeric zone maps (column → [min,max]) recorded at commit
-    * time — empty map for files written before bounds existed. */
-  def fileBounds(ns: String, table: String): Map[String, Map[String, (Double, Double)]] = {
-    val p = fileStatsPath(ns, table)
-    if (!Files.exists(p)) Map.empty
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      Files.readAllLines(p).asScala.filter(_.nonEmpty).map { line =>
-        val j = JsonMethods.parse(line)
-        val JString(f) = (j \ "file"): @unchecked
-        val bounds = (j \ "bounds") match {
-          case JObject(fields) => fields.collect {
-            case (c, JArray(List(lo, hi))) =>
-              def d(v: JValue): Double = v match {
-                case JDouble(x) => x
-                case JInt(x) => x.toDouble
-                case JLong(x) => x.toDouble
-                case _ => Double.NaN
-              }
-              c -> (d(lo), d(hi))
-          }.toMap
-          case _ => Map.empty[String, (Double, Double)]
-        }
-        f -> bounds
-      }.toMap
-    }
-  }
+    * time — empty map for files written before bounds existed. A column
+    * whose recorded bound is not a finite number has no bounds (must-read). */
+  def fileBounds(ns: String, table: String): Map[String, Map[String, (Double, Double)]] =
+    Sidecar.fileStats(sidecar(ns, table, Sidecar.FileStats))
+      .map(s => s.file -> s.bounds).toMap
 
-  // `<table>_blooms.json`: one line per (data file, indexed column) —
+  // The `blooms` sidecar: one line per (data file, indexed column) —
   // {"file":"part-...","column":"c","m":16384,"k":4,"packed":"<base64>"} —
   // the Iceberg puffin-blob analog: a per-file bloom filter for POINT
   // lookups on columns where zone maps are useless (high-cardinality keys
@@ -1880,9 +1659,6 @@ class LakeCatalog(spark: SparkSession, root: String) {
   // m=16384 → 2048 bytes → 2732 base64 chars (~2.8 KB/line with framing),
   // 10-20× smaller than the r6 JSON int-list encoding and O(m) regardless
   // of fill. Legacy `"bits":[...]` lines from older sidecars still parse.
-
-  private def bloomsPath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_blooms.json")
 
   /** Build + record per-file bloom filters over `column` for every current
     * data file. ONE column-pruned distributed pass: (file, key) → k bit
@@ -1961,86 +1737,45 @@ class LakeCatalog(spark: SparkSession, root: String) {
       }
       java.util.Base64.getEncoder.encodeToString(buf.array())
     }
-    val p = bloomsPath(ns, table)
+    val p = sidecar(ns, table, Sidecar.Blooms)
     // lines for OTHER columns survive the rewrite verbatim; this column's
     // old lines (and any legacy duplicates) are dropped
-    val keep: Seq[String] =
-      if (!Files.exists(p)) Seq.empty
-      else Files.readAllLines(p).asScala.toSeq.filter { line =>
-        line.nonEmpty && !parsedBloomColumn(line).contains(colName)
-      }
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    val w = Files.newBufferedWriter(tmp)
+    val keep = Sidecar.blooms(p).filter(_.column != colName).map(_.raw)
     val seen = scala.collection.mutable.HashSet.empty[String]
-    try {
-      keep.foreach { l => w.write(l); w.write("\n") }
-      val it = lines.toLocalIterator()
-      while (it.hasNext) {
-        val r = it.next()
-        val f = r.getString(0)
-        seen += f
-        w.write(s"""{"file":"$f","column":"$colName","vtype":"$vtype","m":$m,"k":$k,"packed":"${packB64(r.getSeq[org.apache.spark.sql.Row](1))}"}""")
-        w.write("\n")
-      }
-      // files whose column is entirely NULL have no rows above: record an
-      // empty (all-zero) bloom so they still prune as true negatives
-      val emptyPacked = java.util.Base64.getEncoder
-        .encodeToString(new Array[Byte](nWords * 8))
-      cur.filterNot(seen).foreach { f =>
-        w.write(s"""{"file":"$f","column":"$colName","vtype":"$vtype","m":$m,"k":$k,"packed":"$emptyPacked"}""")
-        w.write("\n")
-      }
-    } finally w.close()
-    Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val fresh = lines.toLocalIterator().asScala.map { r =>
+      val f = r.getString(0)
+      seen += f
+      Sidecar.bloomLine(f, colName, vtype, m, k,
+        packB64(r.getSeq[org.apache.spark.sql.Row](1)))
+    }
+    // files whose column is entirely NULL have no rows above: record an
+    // empty (all-zero) bloom so they still prune as true negatives. The
+    // concatenation is lazy, so `seen` is complete when this runs.
+    val emptyPacked = java.util.Base64.getEncoder
+      .encodeToString(new Array[Byte](nWords * 8))
+    def empties = cur.filterNot(seen).iterator.map(f =>
+      Sidecar.bloomLine(f, colName, vtype, m, k, emptyPacked))
+    Sidecar.replace(p, keep.iterator ++ fresh ++ empties)
   }
 
-  /** The `"column"` field of one sidecar line (None on parse failure). */
-  private def parsedBloomColumn(line: String): Option[String] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    try JsonMethods.parse(line) \ "column" match {
-      case JString(c) => Some(c)
-      case _ => None
-    } catch { case _: Throwable => None }
-  }
-
-  /** One parsed sidecar line → (file, column, vtype, m, k, words). Accepts
-    * the packed base64 format and the legacy JSON int-list format. */
-  private def parseBloomLine(line: String)
-      : Option[(String, String, String, Int, Int, Array[Long])] =
-    LakeCatalog.parseBloomLine(line)
-
-  /** All recorded blooms for (table, column): file → (vtype, m, k, words).
-    * Later lines win (legacy append-era sidecars may carry duplicates). */
+  /** All recorded blooms for (table, column), by file. Later lines win
+    * (legacy append-era sidecars may carry duplicates). */
   private def fileBlooms(ns: String, table: String,
-                         column: String): Map[String, (String, Int, Int, Array[Long])] = {
-    val p = bloomsPath(ns, table)
-    if (!Files.exists(p)) Map.empty
-    else Files.readAllLines(p).asScala.filter(_.nonEmpty)
-      .flatMap(parseBloomLine)
-      .collect { case (f, c, vt, m, k, ws) if c == column => f -> (vt, m, k, ws) }
-      .toMap // later lines win (re-index replaces)
-  }
+                         column: String): Map[String, Sidecar.Bloom] =
+    Sidecar.blooms(sidecar(ns, table, Sidecar.Blooms))
+      .filter(_.column == column).map(b => b.file -> b).toMap
 
   /** Bloom sidecar summary (every indexed column): (file, column, m, k,
     * bits set) — the SHOW BLOOMS gateway payload, metadata only. Same
     * later-lines-win dedup as the prune path, so a legacy append-era
     * sidecar never shows duplicate rows. */
   def bloomsMeta(ns: String, table: String): Seq[(String, String, Int, Int, Int)] = {
-    val p = bloomsPath(ns, table)
-    if (!Files.exists(p)) Seq.empty
-    else {
-      val byKey = scala.collection.mutable.LinkedHashMap
-        .empty[(String, String), (Int, Int, Int)]
-      Files.readAllLines(p).asScala.filter(_.nonEmpty)
-        .flatMap(parseBloomLine)
-        .foreach { case (f, c, _, m, k, ws) =>
-          byKey((f, c)) = (m, k, ws.map(java.lang.Long.bitCount).sum)
-        }
-      byKey.toSeq.map { case ((f, c), (m, k, n)) => (f, c, m, k, n) }
+    val byKey = scala.collection.mutable.LinkedHashMap
+      .empty[(String, String), (Int, Int, Int)]
+    Sidecar.blooms(sidecar(ns, table, Sidecar.Blooms)).foreach { b =>
+      byKey((b.file, b.column)) = (b.m, b.k, b.words.map(java.lang.Long.bitCount).sum)
     }
+    byKey.toSeq.map { case ((f, c), (m, k, n)) => (f, c, m, k, n) }
   }
 
   /** Point-lookup scan planning from bloom metadata: a file is skipped iff
@@ -2074,8 +1809,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val stats = fileStats(ns, table)
     cur.filter(f => stats.get(f).forall(_ > 0)).partition { f =>
       blooms.get(f) match {
-        case Some((vt, m, k, words)) if vt == vtype =>
-          LakeCatalog.bloomMightContain(m, k, words, hashed)
+        case Some(b) if b.vtype == vtype =>
+          LakeCatalog.bloomMightContain(b.m, b.k, b.words, hashed)
         case _ => true // no bloom / wrong key normalization → must read
       }
     }
@@ -2224,40 +1959,21 @@ class LakeCatalog(spark: SparkSession, root: String) {
     Files.createDirectories(dir)
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       .write.mode("overwrite").parquet(dir.toString)
-    val meta = schema.fields.map(f =>
-      s"""{"name":"${f.name}","type":"${f.dataType.sql.toLowerCase}","nullable":${f.nullable}}""")
-      .mkString("[", ",", "]")
-    def arr(xs: Seq[String]) = xs.map(x => s""""$x"""").mkString("[", ",", "]")
-    val props = properties.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    Files.writeString(dir.resolveSibling(s"${table}_meta.json"),
-      s"""{"table":"$ns.$table","schema":$meta,"partition_spec":${arr(partitionSpec)},"sort_order":${arr(sortOrder)},"properties":$props}""")
+    Sidecar.replace(sidecar(ns, table, Sidecar.Meta), Iterator(Sidecar.metaLine(
+      s"$ns.$table", schema, partitionSpec, sortOrder, properties)))
     val v0Files = listParquet(dir)
     recordFileStats(ns, table, v0Files) // the v0 schema file: 0 rows
     commitSnapshot(ns, table, v0Files) // v0: the empty table
   }
 
-  /** Declared table metadata from the `_meta.json` sidecar:
+  /** Declared table metadata from the `meta` sidecar:
     * (partition_spec, sort_order, properties). Empty for tables without a
     * sidecar (flat test-data warehouse). */
-  def tableMeta(ns: String, table: String): (Seq[String], Seq[String], Map[String, String]) = {
-    val p = Paths.get(s"$root/$ns/${table}_meta.json")
-    if (!Files.exists(p)) (Seq.empty, Seq.empty, Map.empty)
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val j = JsonMethods.parse(Files.readString(p))
-      def arr(field: String): Seq[String] = (j \ field) match {
-        case JArray(a) => a.collect { case JString(s) => s }
-        case _ => Seq.empty
-      }
-      val props = (j \ "properties") match {
-        case JObject(fs) => fs.collect { case (k, JString(v)) => k -> v }.toMap
-        case _ => Map.empty[String, String]
-      }
-      (arr("partition_spec"), arr("sort_order"), props)
+  def tableMeta(ns: String, table: String): (Seq[String], Seq[String], Map[String, String]) =
+    Sidecar.metaObject(sidecar(ns, table, Sidecar.Meta)).map(Sidecar.meta) match {
+      case Some(m) => (m.partitionSpec, m.sortOrder, m.properties)
+      case None => (Seq.empty, Seq.empty, Map.empty)
     }
-  }
 
   /** Full DESCRIBE parity with the reference (IcebergConnection.py:66-77
     * returns schema + partition_spec + sort_order + properties): normalized
@@ -2310,12 +2026,13 @@ class LakeCatalog(spark: SparkSession, root: String) {
   }
 
   /** Metadata-only property update (Iceberg ALTER TABLE SET TBLPROPERTIES):
-    * rewrites the `_meta.json` sidecar's properties object, touching no
+    * rewrites the `meta` sidecar's properties object, touching no
     * data file and committing no snapshot — exactly the cost profile an
     * upgrade must have on a 100 TB table. */
   def setProperty(ns: String, table: String, key: String, value: String): Unit = {
-    val p = Paths.get(s"$root/$ns/${table}_meta.json")
-    require(Files.exists(p), s"no metadata sidecar for $ns.$table")
+    val p = sidecar(ns, table, Sidecar.Meta)
+    val meta = Sidecar.metaObject(p)
+    require(meta.isDefined, s"no metadata sidecar for $ns.$table")
     // format-version is a capability CONTRACT, not a free-form property
     // (ADVICE r12): it must parse as an int, and downgrades are refused —
     // Iceberg does the same, because a v1 table holding deletion-vector /
@@ -2329,23 +2046,13 @@ class LakeCatalog(spark: SparkSession, root: String) {
       if (parsed < cur) throw new IllegalStateException(
         s"cannot downgrade format-version $cur -> $parsed on $ns.$table " +
           "(Iceberg rejects format-version downgrades)")
-      val hasDeleteSidecars = Files.exists(dvPath(ns, table)) ||
-        Files.exists(eqDelPath(ns, table))
+      val hasDeleteSidecars = Files.exists(sidecar(ns, table, Sidecar.Dv)) ||
+        Files.exists(sidecar(ns, table, Sidecar.EqDel))
       if (parsed < 2 && hasDeleteSidecars) throw new IllegalStateException(
         s"$ns.$table holds row-level delete sidecars; format-version must stay >= 2")
     }
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val j = JsonMethods.parse(Files.readString(p))
-    val props = tableMeta(ns, table)._3 + (key -> value)
-    val newProps: JValue = JObject(props.toSeq.sortBy(_._1)
-      .map { case (k, v) => k -> (JString(v): JValue) }.toList)
-    val updated = j match {
-      case JObject(fs) =>
-        JObject(fs.filterNot(_._1 == "properties") :+ ("properties" -> newProps))
-      case other => other
-    }
-    Files.writeString(p, JsonMethods.compact(JsonMethods.render(updated)))
+    val props = Sidecar.meta(meta.get).properties + (key -> value)
+    Sidecar.replace(p, Iterator(Sidecar.withProperties(meta.get, props)))
   }
 
   /** v1 → v2 upgrade (metadata-only, idempotent): returns
@@ -2371,28 +2078,11 @@ class LakeCatalog(spark: SparkSession, root: String) {
   // data, and compaction simply invalidates by file identity (rewritten
   // files are new files: they get fresh sketches on the next analyze pass).
 
-  private def ndvPath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_ndv.json")
-
   private def ndvEntries(ns: String, table: String,
-                         colName: String): Map[String, Seq[Long]] = {
-    val p = ndvPath(ns, table)
-    if (!Files.exists(p)) Map.empty
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      Files.readAllLines(p).asScala.filter(_.nonEmpty).flatMap { l =>
-        val j = JsonMethods.parse(l)
-        val c = (j \ "col") match { case JString(x) => x; case _ => "" }
-        val f = (j \ "file") match { case JString(x) => x; case _ => "" }
-        val mins = (j \ "mins") match {
-          case JArray(a) => a.collect { case JInt(x) => x.toLong }
-          case _ => Seq.empty[Long]
-        }
-        if (c == colName && f.nonEmpty) Some(f -> mins) else None
-      }.toMap
-    }
-  }
+                         colName: String): Map[String, Seq[Long]] =
+    Sidecar.ndv(sidecar(ns, table, Sidecar.Ndv))
+      .collect { case s if s.col == colName && s.file.nonEmpty => s.file -> s.mins }
+      .toMap
 
   /** Incremental NDV-sketch maintenance: compute the per-file KMV sketch of
     * `colName` for every CURRENT data file that has no recorded sketch yet,
@@ -2429,18 +2119,9 @@ class LakeCatalog(spark: SparkSession, root: String) {
       // stable file identity the sidecar keys on
       .groupBy(_.getString(0).split('/').last)
       .map { case (f, rows) => f -> rows.map(_.getLong(1)).sorted.toSeq }
-    // json4s rendering (ADVICE r12): a column/file name containing a quote
-    // or backslash must not corrupt the sidecar line
-    val lines = fresh.map { f =>
-      import org.json4s.JsonDSL._
-      import org.json4s.jackson.JsonMethods
-      val mins = scan.getOrElse(f, Seq.empty) // empty file: empty sketch
-      JsonMethods.compact(JsonMethods.render(
-        ("file" -> f) ~ ("col" -> colName) ~ ("k" -> k) ~ ("mins" -> mins)))
-    }.mkString("", "\n", "\n")
-    Files.writeString(ndvPath(ns, table), lines,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    // an empty file gets an empty sketch
+    Sidecar.append(sidecar(ns, table, Sidecar.Ndv), fresh.map(f =>
+      Sidecar.ndvLine(Sidecar.NdvSketch(f, colName, k, scan.getOrElse(f, Seq.empty)))))
     fresh.size
   }
 
@@ -2732,36 +2413,18 @@ class LakeCatalog(spark: SparkSession, root: String) {
   // friendly) schemas and unioned by name, which is exactly what an
   // id-based reader does per file.
 
-  private def renamesPath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_renames.json")
-
   /** All recorded renames, oldest first: (oldName, newName, renameVersion). */
-  def renames(ns: String, table: String): Seq[(String, String, Int)] = {
-    val p = renamesPath(ns, table)
-    if (!Files.exists(p)) Seq.empty
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      Files.readAllLines(p).asScala.filter(_.nonEmpty).map { line =>
-        val j = JsonMethods.parse(line)
-        val JString(o) = (j \ "old"): @unchecked
-        val JString(n) = (j \ "new"): @unchecked
-        val JInt(v) = (j \ "v"): @unchecked
-        (o, n, v.toInt)
-      }.toSeq
-    }
-  }
+  def renames(ns: String, table: String): Seq[(String, String, Int)] =
+    Sidecar.renames(sidecar(ns, table, Sidecar.Renames))
+      .map(r => (r.oldName, r.newName, r.v))
 
   /** RENAME COLUMN — metadata-only (one sidecar line); zero files move.
     * Subsequent appends write the NEW name; [[loadRenamed]] reconciles the
     * generations. Chained renames compose in recording order. */
   def renameColumn(ns: String, table: String, oldName: String,
                    newName: String): Unit = {
-    val v = currentVersion(ns, table)
-    Files.writeString(renamesPath(ns, table),
-      s"""{"old":"$oldName","new":"$newName","v":$v}\n""",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    Sidecar.append(sidecar(ns, table, Sidecar.Renames), Seq(Sidecar.renameLine(
+      Sidecar.Rename(oldName, newName, currentVersion(ns, table)))))
   }
 
   /** Rename-aware read of the current snapshot: files added at or before
@@ -2803,10 +2466,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val srcFiles = currentFiles(ns, src).getOrElse(
       throw new IllegalArgumentException(s"no snapshot log for $ns.$src"))
     Files.createDirectories(Paths.get(tablePath(ns, dst)))
-    val srcMeta = Paths.get(s"$root/$ns/${src}_meta.json")
-    if (Files.exists(srcMeta))
-      Files.copy(srcMeta, Paths.get(s"$root/$ns/${dst}_meta.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Sidecar.metaObject(sidecar(ns, src, Sidecar.Meta)).foreach(m =>
+      Sidecar.replace(sidecar(ns, dst, Sidecar.Meta), Iterator(m)))
     if (deep) srcFiles.foreach { f =>
       Files.copy(Paths.get(tablePath(ns, src)).resolve(f),
         Paths.get(tablePath(ns, dst)).resolve(f),
@@ -2815,94 +2476,56 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val committed =
       if (deep) srcFiles else srcFiles.map(f => s"../$src/$f")
     commitSnapshot(ns, dst, committed)
-    // manifest stats travel: rekey the source's sidecar lines for files in
-    // the cloned snapshot onto their ../ references (string rewrite of the
-    // unique file name — names carry write UUIDs); a deep clone keeps the
-    // local basename keys its copied files answer to
-    val srcStats = fileStatsPath(ns, src)
-    if (Files.exists(srcStats)) {
-      val inClone = srcFiles.toSet
-      val lines = Files.readAllLines(srcStats).asScala.filter(_.nonEmpty)
-        .flatMap { line =>
-          inClone.find(f => line.contains(s""""file":"$f"""")).map(f =>
-            if (deep) line
-            else line.replace(s""""file":"$f"""", s""""file":"../$src/$f""""))
-        }.mkString("", "\n", "\n")
-      Files.writeString(fileStatsPath(ns, dst), lines,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    // manifest stats travel: the source's lines for files in the cloned
+    // snapshot, rekeyed onto their ../ references (names carry write UUIDs,
+    // so they are unique); a deep clone keeps the local basename keys its
+    // copied files answer to
+    val inClone = srcFiles.toSet
+    Sidecar.append(sidecar(ns, dst, Sidecar.FileStats),
+      Sidecar.fileStats(sidecar(ns, src, Sidecar.FileStats))
+        .filter(s => inClone(s.file))
+        .map(s => if (deep) s.raw else Sidecar.withFile(s.raw, s"../$src/${s.file}")))
     // deletion vectors inherit at clone v0 (the clone must not resurrect
     // source-deleted rows); file keys stay basenames — the DV anti-join
     // matches on scan-path basename. Only lines LIVE at the source head
     // inherit ([[liveDvPairs]]): a token-orphaned line from a failed source
     // CAS must not activate in the clone. Rewritten lines drop version AND
     // token (v:0 untokened = unconditionally live baseline state).
-    if (Files.exists(dvPath(ns, src))) {
-      val headV = currentVersion(ns, src)
-      val live = liveDvPairs(ns, src, headV)
-        .groupBy(_._1).toSeq.sortBy(_._1)
-      // ref-shaped lines: COPY the immutable delete-file parquet into the
-      // clone's own _deletes dir (file IO ∝ delete-file bytes, the same
-      // cost class as deep-cloning a data file) so the clone never dangles
-      // on a later drop/expire of the source, then re-line at v0 untokened
-      val liveRefs = liveDvLines(ns, src, headV).filter(_.ref.isDefined)
-      def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-      val refLines = liveRefs.map { e =>
-        val srcDir = Paths.get(s"$root/${e.ref.get}")
-        val base = srcDir.getFileName.toString
-        val dstRel = s"$ns/${dst}_deletes/$base"
-        copyDir(srcDir, Paths.get(s"$root/$dstRel"))
-        s"""{"v":0,"ref":"${esc(dstRel)}","nfiles":{${
-          e.nfiles.toSeq.sortBy(_._1)
-            .map { case (f, c) => "\"" + esc(f) + "\":" + c }.mkString(",")
-        }}}"""
-      }
-      if (live.nonEmpty || refLines.nonEmpty) {
-        val lines = (live.map { case (f, ps) =>
-          s"""{"v":0,"file":"$f","pos":[${ps.map(_._2).sorted.mkString(",")}]}"""
-        } ++ refLines).mkString("", "\n", "\n")
-        Files.writeString(dvPath(ns, dst), lines,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-      }
+    val srcHead = currentVersion(ns, src)
+    val live = liveDvPairs(ns, src, srcHead)
+      .groupBy(_._1).toSeq.sortBy(_._1)
+    // ref-shaped lines: COPY the immutable delete-file parquet into the
+    // clone's own _deletes dir (file IO ∝ delete-file bytes, the same
+    // cost class as deep-cloning a data file) so the clone never dangles
+    // on a later drop/expire of the source, then re-line at v0 untokened
+    val refLines = liveDvLines(ns, src, srcHead).filter(_.ref.isDefined).map { e =>
+      val dstRel = copyDeletes(ns, dst, e.ref.get)
+      e.copy(v = 0, token = None, ref = Some(dstRel))
     }
+    Sidecar.append(sidecar(ns, dst, Sidecar.Dv), (live.map { case (f, ps) =>
+      Sidecar.DvLine(0, None, f, ps.map(_._2).sorted, None, Map.empty)
+    } ++ refLines).map(Sidecar.dvLine))
     // equality deletes inherit the same way: live lines land at v:0
     // untokened with scope 1 — they apply exactly to the cloned baseline
     // (every clone-v0 file has added-version 0 < 1) and never to the
     // clone's own later appends; source version numbers mean nothing in
     // the destination's sequence. Per-file matched counts carry over
-    // verbatim (basenames are preserved by both clone modes).
-    if (Files.exists(eqDelPath(ns, src))) {
-      val live = liveEqDeletes(ns, src, currentVersion(ns, src))
-      if (live.nonEmpty) {
-        def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-        val lines = live.map { e =>
-          e.ref match {
-            case Some(r) =>
-              // ref-shaped key payload: copy the immutable parquet into the
-              // clone's _deletes dir (same dangling-source rationale as the
-              // DV ref inherit above)
-              val srcDir = Paths.get(s"$root/$r")
-              val dstRel = s"$ns/${dst}_deletes/${srcDir.getFileName}"
-              copyDir(srcDir, Paths.get(s"$root/$dstRel"))
-              s"""{"v":0,"col":"${esc(e.col)}","ref":"${esc(dstRel)}","files":{${
-                e.fileCounts.toSeq.sortBy(_._1)
-                  .map { case (f, n) => "\"" + esc(f) + "\":" + n }.mkString(",")
-              }},"scope":1}"""
-            case None =>
-              s"""{"v":0,"col":"${esc(e.col)}","vals":[${
-                e.vals.map(k => "\"" + esc(k) + "\"").mkString(",")}],"files":{${
-                e.fileCounts.toSeq.sortBy(_._1)
-                  .map { case (f, n) => "\"" + esc(f) + "\":" + n }.mkString(",")
-              }},"scope":1}"""
-          }
-        }.mkString("", "\n", "\n")
-        Files.writeString(eqDelPath(ns, dst), lines,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-      }
-    }
+    // verbatim (basenames are preserved by both clone modes). A ref-shaped
+    // key payload is copied like the DV refs above.
+    Sidecar.append(sidecar(ns, dst, Sidecar.EqDel),
+      liveEqDeletes(ns, src, srcHead).map { e =>
+        Sidecar.eqDelLine(e.copy(v = 0, token = None, scope = Some(1),
+          applies = None, ref = e.ref.map(copyDeletes(ns, dst, _))))
+      })
+  }
+
+  /** Copy the delete-file directory `ref` (root-relative) into `table`'s
+    * own `_deletes` dir; returns the copy's root-relative path. */
+  private def copyDeletes(ns: String, table: String, ref: String): String = {
+    val srcDir = Paths.get(s"$root/$ref")
+    val dstRel = s"$ns/${table}_deletes/${srcDir.getFileName}"
+    copyDir(srcDir, Paths.get(s"$root/$dstRel"))
+    dstRel
   }
 
   /** Recursive directory copy (delete-file ref inheritance on clone). */
@@ -2946,20 +2569,19 @@ class LakeCatalog(spark: SparkSession, root: String) {
     // the manifest-stats sidecar: a stale v0 stats entry would otherwise let
     // countStar answer Some(0) for a table whose rows live in partition
     // subdirectories the sidecar never saw.
-    val log = snapshotLogPath(ns, table)
-    if (Files.exists(log)) Files.delete(log)
-    val stats = fileStatsPath(ns, table)
-    if (Files.exists(stats)) Files.delete(stats)
+    retireSnapshotLog(ns, table)
     // record the physical layout as the declared partition spec so DESCRIBE
     // surfaces it (Iceberg: the spec is table metadata, not a write option)
-    val metaPath = Paths.get(s"$root/$ns/${table}_meta.json")
-    if (Files.exists(metaPath)) {
-      val specJson = partitionCols.map(c => s""""$c"""").mkString("[", ",", "]")
-      val updated = Files.readString(metaPath)
-        .replaceFirst(""""partition_spec":\[[^\]]*\]""",
-          java.util.regex.Matcher.quoteReplacement(s""""partition_spec":$specJson"""))
-      Files.writeString(metaPath, updated)
-    }
+    val metaPath = sidecar(ns, table, Sidecar.Meta)
+    Sidecar.metaObject(metaPath).foreach(m => Sidecar.replace(metaPath,
+      Iterator(Sidecar.withPartitionSpec(m, partitionCols))))
+  }
+
+  /** Partition-layout tables are served by directory listing + pruning:
+    * drop the flat-file snapshot log and the manifest-stats sidecar. */
+  private def retireSnapshotLog(ns: String, table: String): Unit = {
+    Sidecar.delete(sidecar(ns, table, Sidecar.Snapshots))
+    Sidecar.delete(sidecar(ns, table, Sidecar.FileStats))
   }
 
   /** Single typed-row INSERT (the reference's whole INSERT surface,
@@ -2984,9 +2606,6 @@ class LakeCatalog(spark: SparkSession, root: String) {
   // bounded directory fan (n buckets), and the user cannot write an
   // unprunable query by forgetting the derived column.
 
-  private def hiddenSpecPath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_hidden_spec.json")
-
   /** Bucket-transform partitioned append: `_bucket = pmod(xxhash64(src), n)`
     * computed in the write projection (never part of the user schema), laid
     * out hive-style so partition pruning is directory-granular. */
@@ -2995,14 +2614,9 @@ class LakeCatalog(spark: SparkSession, root: String) {
     df.withColumn("_bucket", pmod(xxhash64(col(srcCol)), lit(nBuckets.toLong)))
       .write.mode("append").partitionBy("_bucket")
       .parquet(s"$root/$ns/$table")
-    // partition-layout table: retire flat-file log/stats (appendPartitioned
-    // precedent — directory listing + pruning serve this layout)
-    val log = snapshotLogPath(ns, table)
-    if (Files.exists(log)) Files.delete(log)
-    val stats = fileStatsPath(ns, table)
-    if (Files.exists(stats)) Files.delete(stats)
-    Files.writeString(hiddenSpecPath(ns, table),
-      s"""{"transform":"bucket","source":"$srcCol","n":$nBuckets}""")
+    retireSnapshotLog(ns, table)
+    Sidecar.replace(sidecar(ns, table, Sidecar.HiddenSpec),
+      Iterator(Sidecar.hiddenSpecLine("bucket", srcCol, nBuckets)))
   }
 
   /** days() transform partitioned append (the temporal sibling of
@@ -3015,12 +2629,9 @@ class LakeCatalog(spark: SparkSession, root: String) {
     df.withColumn("_day", expr(s"($tsCol div 1000) div 86400000000"))
       .write.mode("append").partitionBy("_day")
       .parquet(s"$root/$ns/$table")
-    val log = snapshotLogPath(ns, table)
-    if (Files.exists(log)) Files.delete(log)
-    val stats = fileStatsPath(ns, table)
-    if (Files.exists(stats)) Files.delete(stats)
-    Files.writeString(hiddenSpecPath(ns, table),
-      s"""{"transform":"days","source":"$tsCol","n":0}""")
+    retireSnapshotLog(ns, table)
+    Sidecar.replace(sidecar(ns, table, Sidecar.HiddenSpec),
+      Iterator(Sidecar.hiddenSpecLine("days", tsCol, 0)))
   }
 
   /** Range scan through the days() spec: [loUs, hiUs) in epoch-µs prunes
@@ -3064,16 +2675,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
   }
 
   /** The recorded hidden spec: (source column, bucket count). */
-  def hiddenSpec(ns: String, table: String): Option[(String, Int)] = {
-    val p = hiddenSpecPath(ns, table)
-    if (!Files.exists(p)) None
-    else {
-      val body = Files.readString(p)
-      val src = """"source":"([^"]+)"""".r.findFirstMatchIn(body).map(_.group(1))
-      val n = """"n":(\d+)""".r.findFirstMatchIn(body).map(_.group(1).toInt)
-      for (s <- src; k <- n) yield (s, k)
-    }
-  }
+  def hiddenSpec(ns: String, table: String): Option[(String, Int)] =
+    Sidecar.hiddenSpec(sidecar(ns, table, Sidecar.HiddenSpec))
 
   /** Equality scan through the hidden spec: the literal is transformed with
     * the SAME expression the writer used (one-row plan — metadata scale),
@@ -3140,18 +2743,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
   // a foreachBatch REPLAY of the same id (Spark delivers at-least-once to
   // sinks) is fenced by the very write that committed the data, so there is
   // no crash window where data is committed but the fence is not.
-  private def batchStatePath(ns: String, table: String): Path =
-    Paths.get(s"$root/$ns/${table}_stream_state.json") // legacy file, cleanup only
-
-  def lastCommittedBatch(ns: String, table: String): Option[Long] = {
-    val p = snapshotLogPath(ns, table)
-    if (!Files.exists(p)) None
-    else {
-      val ids = Files.readAllLines(p).asScala.flatMap(line =>
-        """"batch":(-?\d+)""".r.findFirstMatchIn(line).map(_.group(1).toLong))
-      ids.maxOption
-    }
-  }
+  def lastCommittedBatch(ns: String, table: String): Option[Long] =
+    snapshotLog(ns, table).flatMap(_.batch).maxOption
 
   /** Expire history: keep the last `keep` snapshots, delete the log entries
     * before them AND any data file no surviving snapshot references (the
@@ -3159,7 +2752,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * Versions keep their original numbers, so time travel to surviving
     * snapshots is unaffected. */
   def expireSnapshots(ns: String, table: String, keep: Int): Unit = {
-    val all = snapshots(ns, table)
+    val log = snapshotLog(ns, table)
+    val all = log.map(e => (e.v, e.files))
     // every named ref's target survives expiry regardless of age — aging
     // out a live branch head would break its audit reads (Iceberg refuses
     // the same way: refs retain their snapshots)
@@ -3189,11 +2783,10 @@ class LakeCatalog(spark: SparkSession, root: String) {
       // committed between the ref and the keep window expires too, and
       // folding it to cutoff would leak it into the ref's older read.
       val survivorSorted = survivorVs.toSeq.sorted
-      val dvp = dvPath(ns, table)
-      if (Files.exists(dvp)) {
+      val entries = dvEntries(ns, table)
+      if (entries.nonEmpty) {
         val head = currentVersion(ns, table)
         val toks = snapshotTokens(ns, table)
-        val entries = dvEntries(ns, table)
         val (expTok, keepE) = entries.partition(e =>
           e.token.isDefined && !survivorVs.contains(e.v))
         val liveExp = expTok.filter(e =>
@@ -3203,34 +2796,15 @@ class LakeCatalog(spark: SparkSession, root: String) {
             .map(tgt => e.ps.map(p => (tgt, e.file, p))))
           .flatten
           .distinct.groupBy(p => (p._1, p._2)).toSeq.sortBy(_._1)
-        def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-        def renderRef(v: Int, tokOpt: Option[String], e: DvLine): String = {
-          val t = tokOpt.map(x => s""""token":"$x",""").getOrElse("")
-          s"""{"v":$v,$t"ref":"${esc(e.ref.get)}","nfiles":{${
-            e.nfiles.toSeq.sortBy(_._1)
-              .map { case (f, c) => "\"" + esc(f) + "\":" + c }.mkString(",")
-          }}}"""
-        }
         val foldedLines = foldedPairs.map { case ((tgt, f), ps) =>
-          s"""{"v":$tgt,"file":"$f","pos":[${ps.map(_._3).sorted.mkString(",")}]}"""
+          Sidecar.DvLine(tgt, None, f, ps.map(_._3).sorted, None, Map.empty)
         } ++
           // ref-shaped lines fold like inline ones — same target rule,
           // token dropped, the immutable parquet payload kept by reference
           liveExp.filter(_.ref.isDefined).flatMap(e =>
-            survivorSorted.find(_ >= e.v).map(tgt => renderRef(tgt, None, e)))
-        val keptLines = keepE.map { e =>
-          if (e.ref.isDefined) renderRef(e.v, e.token, e)
-          else {
-            val t = e.token.map(x => s""""token":"$x",""").getOrElse("")
-            s"""{"v":${e.v},$t"file":"${e.file}","pos":[${e.ps.mkString(",")}]}"""
-          }
-        }
-        val tmp = dvp.resolveSibling(dvp.getFileName.toString + ".tmp")
-        Files.writeString(tmp,
-          (foldedLines ++ keptLines).mkString("", "\n", "\n"))
-        Files.move(tmp, dvp,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            survivorSorted.find(_ >= e.v).map(tgt => e.copy(v = tgt, token = None)))
+        Sidecar.replace(sidecar(ns, table, Sidecar.Dv),
+          (foldedLines ++ keepE).iterator.map(Sidecar.dvLine))
       }
       // Equality-delete lines need the SAME fold (their tokens validate
       // against log lines about to be truncated), with one extra rule: the
@@ -3242,54 +2816,32 @@ class LakeCatalog(spark: SparkSession, root: String) {
       // resurrect) or, folded naively onto the new version, too wide
       // (post-delete re-inserts die). The explicit list is computed NOW,
       // while the full log can still answer "which files predate scope".
-      val eqp = eqDelPath(ns, table)
-      if (Files.exists(eqp)) {
+      val eqEntries = eqDelEntries(ns, table)
+      if (eqEntries.nonEmpty) {
         val head = currentVersion(ns, table)
         val toks = snapshotTokens(ns, table)
         val addedV = fileAddedVersion(ns, table)
         val surviving = all.filter(s => survivorVs(s._1)).flatMap(_._2)
           .map(f => Paths.get(f).getFileName.toString).distinct.sorted
-        def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-        def render(e: EqDelete): String = {
-          val t = e.token.map(x => s""""token":"$x",""").getOrElse("")
-          val ap = e.applies.map(fs =>
-            s""","applies":[${fs.map(f => "\"" + esc(f) + "\"").mkString(",")}]""")
-            .getOrElse("")
-          // ref-shaped lines keep their parquet key payload by reference;
-          // inline lines keep their vals — either way the fold only
-          // rewrites v/token/applies
-          val payload = e.ref match {
-            case Some(r) => s""""ref":"${esc(r)}""""
-            case None => s""""vals":[${
-              e.vals.map(k => "\"" + esc(k) + "\"").mkString(",")}]"""
-          }
-          s"""{"v":${e.v},$t"col":"${esc(e.col)}",$payload,"files":{${
-            e.fileCounts.toSeq.sortBy(_._1)
-              .map { case (f, n) => "\"" + esc(f) + "\":" + n }.mkString(",")
-          }},"scope":${e.scope}$ap}"""
-        }
-        val entries = eqDelEntries(ns, table)
-        val (expTok, keepE) = entries.partition(e =>
+        val (expTok, keepE) = eqEntries.partition(e =>
           e.token.isDefined && !survivorVs.contains(e.v))
-        def materialized(e: EqDelete): Seq[String] =
-          e.applies.getOrElse(surviving.filter(f =>
-            addedV.getOrElse(f, Int.MaxValue) < e.scope))
+        // the fold only rewrites v/token/applies and pins scope (which
+        // defaults to v) before v moves; ref-shaped lines keep their parquet
+        // key payload by reference, inline lines their vals
+        def materialized(e: EqDelete): EqDelete =
+          e.copy(scope = Some(e.scopeV), applies = Some(e.applies.getOrElse(
+            surviving.filter(f => addedV.getOrElse(f, Int.MaxValue) < e.scopeV))))
         val folded = expTok
           .filter(e => e.v <= head &&
             e.token.forall(t => toks.get(e.v).contains(t)))
-          .flatMap(e => survivorVs.toSeq.sorted.find(_ >= e.v)
-            .map(tgt => e.copy(v = tgt, token = None,
-              applies = Some(materialized(e)))))
+          .flatMap(e => survivorSorted.find(_ >= e.v)
+            .map(tgt => materialized(e).copy(v = tgt, token = None)))
         // SURVIVING lines materialize too: truncation re-registers files
         // kept from expired snapshots at their first SURVIVING version, so
         // even a kept line's version-scope comparison would drift
-        val kept = keepE.map(e => e.copy(applies = Some(materialized(e))))
-        val tmp = eqp.resolveSibling(eqp.getFileName.toString + ".tmp")
-        Files.writeString(tmp,
-          (folded ++ kept).map(render).mkString("", "\n", "\n"))
-        Files.move(tmp, eqp,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        val kept = keepE.map(materialized)
+        Sidecar.replace(sidecar(ns, table, Sidecar.EqDel),
+          (folded ++ kept).iterator.map(Sidecar.eqDelLine))
       }
       val referenced = all.filter(s => survivorVs(s._1)).flatMap(_._2).toSet
       val dir = Paths.get(tablePath(ns, table))
@@ -3299,71 +2851,31 @@ class LakeCatalog(spark: SparkSession, root: String) {
       // crash mid-way, log entries pointing at deleted files — a broken
       // table. This order's worst case is merely orphaned files a re-run
       // reclaims.
-      // keep the surviving RAW lines verbatim (they may carry extra fields —
-      // e.g. streaming batch ids — that regeneration would drop), matched
-      // to their parsed version by position (snapshots() reads these lines)
-      val logPath = snapshotLogPath(ns, table)
-      val raw = Files.readAllLines(logPath).asScala.filter(_.nonEmpty)
-      val lines = raw.zip(all).collect {
-        case (line, (v, _)) if survivorVs(v) => line
-      }.mkString("", "\n", "\n")
-      val tmp = logPath.resolveSibling(logPath.getFileName.toString + ".tmp")
-      Files.writeString(tmp, lines)
-      Files.move(tmp, logPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      // keep the surviving lines as read, fields this reader does not
+      // model included
+      Sidecar.replace(sidecar(ns, table, Sidecar.Snapshots),
+        log.iterator.filter(e => survivorVs(e.v)).map(_.raw))
       listParquet(dir).filterNot(referenced).foreach(f =>
         Files.deleteIfExists(dir.resolve(f)))
     }
   }
 
+  /** Delete the table: its directory, every sidecar kind (a recreated
+    * table must inherit none of them — deletes, blooms, renames, stats) and
+    * its distributed delete-file payloads. */
   def dropTable(ns: String, table: String): Unit = {
     val dir = Paths.get(s"$root/$ns/$table")
     if (Files.exists(dir)) {
       val w = Files.walk(dir)
       try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
       finally w.close()
-      val meta = dir.resolveSibling(s"${table}_meta.json")
-      if (Files.exists(meta)) Files.delete(meta)
     }
-    val log = snapshotLogPath(ns, table)
-    if (Files.exists(log)) Files.delete(log)
-    val evo = Paths.get(s"$root/$ns/${table}_evolution.json")
-    if (Files.exists(evo)) Files.delete(evo)
-    val st = batchStatePath(ns, table)
-    if (Files.exists(st)) Files.delete(st)
-    val fs = fileStatsPath(ns, table)
-    if (Files.exists(fs)) Files.delete(fs)
-    val rf = refsPath(ns, table)
-    if (Files.exists(rf)) Files.delete(rf)
-    val cs = colStatsPath(ns, table)
-    if (Files.exists(cs)) Files.delete(cs)
-    val dv = dvPath(ns, table)
-    if (Files.exists(dv)) Files.delete(dv)
-    // equality-delete sidecar: a recreated table must not inherit deletes
-    val eq = eqDelPath(ns, table)
-    if (Files.exists(eq)) Files.delete(eq)
-    // distributed delete-file refs (parquet payloads of ref-shaped lines)
+    Sidecar.kinds.foreach(k => Sidecar.delete(sidecar(ns, table, k)))
     val delDir = Paths.get(s"$root/$ns/${table}_deletes")
     if (Files.exists(delDir)) {
       Files.walk(delDir).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.deleteIfExists(p))
     }
-    // the bloom sidecar too (ADVICE r6): a recreated table must not inherit
-    // the old table's per-file blooms — prune soundness would silently rest
-    // on parquet part-file names never being reused
-    val bl = bloomsPath(ns, table)
-    if (Files.exists(bl)) Files.delete(bl)
-    // histogram sidecar (same recreate-inheritance hazard)
-    val hg = histPath(ns, table)
-    if (Files.exists(hg)) Files.delete(hg)
-    // rename sidecar (same recreate-inheritance hazard: a recreated table
-    // must not inherit the old table's column-name mapping)
-    val rn = renamesPath(ns, table)
-    if (Files.exists(rn)) Files.delete(rn)
-    // hidden-partition spec (same recreate-inheritance hazard as blooms)
-    val hs = hiddenSpecPath(ns, table)
-    if (Files.exists(hs)) Files.delete(hs)
   }
 
   // ------------------------------------------------- copy-on-write mutations
@@ -3649,23 +3161,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * reads the sidecar back. */
   def addColumn(ns: String, table: String, field: StructField,
                 defaultSql: String): Unit = {
-    val metaPath = Paths.get(s"$root/$ns/${table}_evolution.json")
-    Files.writeString(metaPath,
-      s"""{"add_column":{"name":"${field.name}","type":"${field.dataType.sql.toLowerCase}","default":"${defaultSql.replace("\"", "\\\"")}"}}""")
-  }
-
-  private def evolution(ns: String, table: String): Option[(String, String)] = {
-    val p = Paths.get(s"$root/$ns/${table}_evolution.json")
-    if (!Files.exists(p)) None
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val j = JsonMethods.parse(Files.readString(p)) \ "add_column"
-      (j \ "name", j \ "default") match {
-        case (JString(n), JString(d)) => Some((n, d))
-        case _ => None
-      }
-    }
+    Sidecar.replace(sidecar(ns, table, Sidecar.Evolution), Iterator(
+      Sidecar.evolutionLine(field.name, field.dataType.sql.toLowerCase, defaultSql)))
   }
 
   /** The table under its evolved schema: old files' missing columns read as
@@ -3676,7 +3173,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val dir = tablePath(ns, table)
     val df = spark.read.option("mergeSchema", "true")
       .parquet(cur.map(f => s"$dir/$f"): _*)
-    evolution(ns, table) match {
+    Sidecar.evolution(sidecar(ns, table, Sidecar.Evolution)) match {
       case Some((name, defaultSql)) if df.columns.contains(name) =>
         df.withColumn(name, coalesce(col(name), org.apache.spark.sql.functions.expr(defaultSql)))
       case Some((name, defaultSql)) =>
@@ -3687,60 +3184,6 @@ class LakeCatalog(spark: SparkSession, root: String) {
 }
 
 object LakeCatalog {
-
-  /** One parsed bloom-sidecar line → (file, column, vtype, m, k, words).
-    * `vtype` is the key normalization the index hashed under ("i" integral
-    * value, "s" portable string polyhash; absent = legacy integral).
-    * Accepts the packed base64 format and the legacy JSON int-list format.
-    * Static so the injected [[graft.plans.ZoneMapPruneRule]] can read the
-    * sidecar without constructing a catalog (the rule sees only a
-    * directory). */
-  private[graft] def parseBloomLine(line: String)
-      : Option[(String, String, String, Int, Int, Array[Long])] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    try {
-      val j = JsonMethods.parse(line)
-      val JString(f) = (j \ "file"): @unchecked
-      val JString(c) = (j \ "column"): @unchecked
-      val vt = (j \ "vtype") match { case JString(x) => x; case _ => "i" }
-      val JInt(m) = (j \ "m"): @unchecked
-      val JInt(k) = (j \ "k"): @unchecked
-      val nWords = (m.toInt + 63) / 64
-      val words = (j \ "packed") match {
-        case JString(b64) =>
-          val bytes = java.util.Base64.getDecoder.decode(b64)
-          val buf = java.nio.ByteBuffer.wrap(bytes) // big-endian (hex order)
-          Array.fill(math.min(nWords, bytes.length / 8))(buf.getLong)
-        case _ => (j \ "bits") match { // legacy int-list encoding
-          case JArray(xs) =>
-            val ws = new Array[Long](nWords)
-            xs.foreach { case JInt(b) =>
-              val bit = b.toInt
-              if (bit >= 0 && bit < m.toInt) ws(bit >> 6) |= 1L << (bit & 63)
-            case _ => () }
-            ws
-          case _ => new Array[Long](nWords)
-        }
-      }
-      Some((f, c, vt, m.toInt, k.toInt, words))
-    } catch { case _: Throwable => None }
-  }
-
-  /** Parse a whole bloom sidecar: file basename → column → (vtype, m, k,
-    * words), later lines winning per (file, column) — the same dedup rule
-    * the catalog's own prune path applies. */
-  private[graft] def bloomSidecar(p: java.nio.file.Path)
-      : Map[String, Map[String, (String, Int, Int, Array[Long])]] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(p).asScala.filter(_.nonEmpty)
-      .flatMap(parseBloomLine)
-      .groupBy(_._1)
-      .map { case (f, lines) =>
-        f -> lines.groupBy(_._2)
-          .map { case (c, ls) => c -> { val l = ls.last; (l._3, l._4, l._5, l._6) } }
-      }
-  }
 
   /** Does the (m, k, words) bloom possibly contain `value`? (True
     * negatives are proofs of absence; positives may be false.) */

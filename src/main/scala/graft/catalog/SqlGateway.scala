@@ -246,6 +246,23 @@ class SqlGateway(spark: SparkSession, catalog: LakeCatalog) {
     catalog.listTables().collectFirst { case (ns, t) if t == table => ns }
       .getOrElse(default)
 
+  /** The filter condition `cond` derives over `ns.table`, as the EXPLAIN
+    * verbs read it: the OPTIMIZED filter, so the box extractor the optimizer
+    * rules run sees resolved attributes with constant-folded literals (the
+    * analyzer leaves promotion casts like `cast(900 as bigint)` unfolded),
+    * else the analyzed one. `verb` prefixes the error when there is none. */
+  private def filterCondition(verb: String, ns: String, table: String,
+                              cond: String): org.apache.spark.sql.catalyst.expressions.Expression = {
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val qe = catalog.loadRenamed(ns, table)
+      .where(org.apache.spark.sql.functions.expr(cond))
+      .queryExecution
+    qe.optimizedPlan.collectFirst { case f: Filter => f.condition }
+      .orElse(qe.analyzed.collectFirst { case f: Filter => f.condition })
+      .getOrElse(throw new IllegalArgumentException(
+        s"$verb: no filter derived from '$cond'"))
+  }
+
   /** Execute one statement of the reference dialect; DataFrame out
     * (the MCP server's rows-of-dicts, Spark-shaped). */
   def execute(sql: String): DataFrame = {
@@ -344,15 +361,7 @@ class SqlGateway(spark: SparkSession, catalog: LakeCatalog) {
 
       case explainRoute(ns, table, cond, thrOpt) =>
         val nsName = Option(ns).getOrElse(resolveNs(table, "scratch"))
-        val qe = catalog.loadRenamed(nsName, table)
-          .where(org.apache.spark.sql.functions.expr(cond))
-          .queryExecution
-        val condExpr = qe.optimizedPlan.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }.orElse(qe.analyzed.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }).getOrElse(throw new IllegalArgumentException(
-          s"EXPLAIN ROUTE: no filter derived from '$cond'"))
+        val condExpr = filterCondition("EXPLAIN ROUTE", nsName, table, cond)
         val box = graft.plans.ZoneMapPruneRule.boxOf(condExpr)
         require(box.nonEmpty,
           "EXPLAIN ROUTE: predicate contributes no range constraint on any column")
@@ -385,19 +394,7 @@ class SqlGateway(spark: SparkSession, catalog: LakeCatalog) {
 
       case explainPruning(ns, table, cond) =>
         val nsName = Option(ns).getOrElse(resolveNs(table, "scratch"))
-        // resolve the predicate against the table and take the OPTIMIZED
-        // filter so the SAME box extractor the optimizer rule runs sees
-        // resolved attributes with constant-folded literals (the analyzer
-        // leaves promotion casts like `cast(900 as bigint)` unfolded)
-        val qe = catalog.loadRenamed(nsName, table)
-          .where(org.apache.spark.sql.functions.expr(cond))
-          .queryExecution
-        val condExpr = qe.optimizedPlan.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }.orElse(qe.analyzed.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }).getOrElse(throw new IllegalArgumentException(
-          s"EXPLAIN PRUNING: no filter derived from '$cond'"))
+        val condExpr = filterCondition("EXPLAIN PRUNING", nsName, table, cond)
         val box = graft.plans.ZoneMapPruneRule.boxOf(condExpr)
         val (zoneSurvivors, zoneDropped) = catalog.pruneFilesBox(nsName, table,
           box.toSeq.sortBy(_._1).map { case (c, (lo, hi)) => (c, lo, hi) })

@@ -198,7 +198,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => NfcNormalize(args.head)))
     // planning-time zone-map file pruning over graft table directories —
     // the transparent (no-API) half of the manifest-pruning story; guarded
-    // to fire only on single-dir parquet relations with a _filestats.json
+    // to fire only on single-dir parquet relations with a manifest-stats
     // sidecar, so foreign datasets are untouched
     ext.injectOptimizerRule(s => graft.plans.ZoneMapPruneRule(s))
     // stats-sidecar join routing (broadcast vs shuffle from ANALYZE +

@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
+import graft.catalog.Sidecar
+
 /** Planning-time cost-based join routing as an injected Catalyst optimizer
   * rule — the step that turns [[graft.catalog.LakeCatalog.joinRouted]] from
   * a demo API into a CBO the PLANNER consults (VERDICT r8 "What's wrong"
@@ -20,8 +22,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * broadcasting a filtered sliver and shuffling a 100 TB probe.
   *
   * Mechanics: for each INNER equi-join side shaped Filter→(Project→)scan of
-  * a graft catalog table (single table directory, `_colstats.json` AND
-  * `_hist.json` sidecars present — i.e. the user ran ANALYZE + CREATE
+  * a graft catalog table (single table directory, `colstats` AND `hist`
+  * sidecars present — i.e. the user ran ANALYZE + CREATE
   * HISTOGRAM), the filter's AND-range box ([[ZoneMapPruneRule.boxOf]] — the
   * same extractor the pruning rule trusts) is estimated per column from the
   * histogram; the SHARPEST (smallest) estimate routes: at or under 20% of
@@ -233,8 +235,8 @@ object CboRouteRule {
     val table = dir.getFileName.toString
     val nsDir = dir.getParent
     if (nsDir == null || nsDir.getParent == null) return None
-    val csPath = nsDir.resolve(s"${table}_colstats.json")
-    val hPath = nsDir.resolve(s"${table}_hist.json")
+    val csPath = Sidecar.path(nsDir, table, Sidecar.ColStats)
+    val hPath = Sidecar.path(nsDir, table, Sidecar.Hist)
     if (!Files.exists(csPath) || !Files.exists(hPath)) return None
     val cap = broadcastRowCap(spark)
     // stat calls only — the parse itself is memoized per content version,
@@ -250,7 +252,7 @@ object CboRouteRule {
     // class the row cap closes. The snapshot log is append-only (size
     // strictly grows per commit) and an ANALYZE of changed content changes
     // the stats payload, so size catches what a same-tick mtime misses.
-    val snapPath = nsDir.resolve(s"${table}_snapshots.json")
+    val snapPath = Sidecar.path(nsDir, table, Sidecar.Snapshots)
     def sig(p: Path): (Long, Long) =
       if (Files.exists(p)) (Files.getLastModifiedTime(p).toMillis, Files.size(p))
       else (-1L, -1L)

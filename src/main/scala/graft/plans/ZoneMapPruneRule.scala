@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 
+import graft.catalog.Sidecar
+
 /** Planning-time zone-map file pruning as an injected Catalyst optimizer
   * rule — the TRANSPARENT rendition of what [[graft.catalog.LakeCatalog]]
   * exposes as an API ([[graft.catalog.LakeCatalog.pruneFilesBox]], gated by
@@ -27,13 +29,13 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
   *   - the row-level Filter itself is left untouched (pruning is
   *     file-granular — survivors still filter);
   *   - the rule fires only on a single-directory parquet relation whose
-  *     directory has a `<table>_filestats.json` sidecar sibling (i.e. IS a
-  *     graft catalog table), so no foreign dataset is ever touched;
+  *     directory has a manifest-stats (`filestats`) sidecar sibling (i.e.
+  *     IS a graft catalog table), so no foreign dataset is ever touched;
   *   - bounds conjuncts come only from AND-chains of `col <op> literal`
   *     comparisons on numeric columns (the exact class zone maps answer);
   *     anything else contributes no constraint;
   *   - r8: integral `col = literal` conjuncts additionally consult the
-  *     BLOOM sidecar (`<table>_blooms.json` — the puffin-blob analog):
+  *     `blooms` sidecar (the puffin-blob analog):
   *     a file whose bloom PROVES the key absent is dropped even when its
   *     zone bounds overlap (the scattered-key case a clustered layout
   *     can't range-prune); files or columns without blooms must-scan.
@@ -69,8 +71,9 @@ case class ZoneMapPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (roots.length != 1) return f
     val dir = Paths.get(roots.head.toUri.getPath)
     if (!Files.isDirectory(dir)) return f
-    val sidecar = dir.resolveSibling(s"${dir.getFileName}_filestats.json")
-    if (!Files.exists(sidecar)) return f
+    val table = dir.getFileName.toString
+    val statsPath = Sidecar.path(dir.getParent, table, Sidecar.FileStats)
+    if (!Files.exists(statsPath)) return f
     val box = ZoneMapPruneRule.boxOf(cond)
     // bloom skipping for equality conjuncts (the puffin-blob analog): a
     // clustered layout zone-prunes ranges but cannot prune a SCATTERED key
@@ -95,13 +98,16 @@ case class ZoneMapPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       ZoneMapPruneRule.eqStringsOf(cond).collect {
         case (c, s) if stringCols(c) =>
           c -> (graft.functions.PolyHash.stringHashOf(s), "s") }
-    val bloomSidecarPath = dir.resolveSibling(s"${dir.getFileName}_blooms.json")
-    val blooms =
-      if (eqs.nonEmpty && Files.exists(bloomSidecarPath))
-        graft.catalog.LakeCatalog.bloomSidecar(bloomSidecarPath)
-      else Map.empty[String, Map[String, (String, Int, Int, Array[Long])]]
+    // file basename → column → bloom, later lines winning
+    val blooms: Map[String, Map[String, Sidecar.Bloom]] =
+      if (eqs.isEmpty) Map.empty
+      else Sidecar.blooms(Sidecar.path(dir.getParent, table, Sidecar.Blooms))
+        .groupBy(_.file).map { case (f, bs) => f -> bs.map(b => b.column -> b).toMap }
     if (box.isEmpty && blooms.isEmpty) return f
-    val bounds = sidecarBounds(sidecar)
+    // file basename → column → (min, max); committed names may be
+    // `../src/<base>` clone references
+    val bounds = Sidecar.fileStats(statsPath)
+      .map(s => s.file.substring(s.file.lastIndexOf('/') + 1) -> s.bounds).toMap
     val files = rel.location.inputFiles
     val survivors = files.filter { path =>
       val name = path.substring(path.lastIndexOf('/') + 1)
@@ -118,8 +124,8 @@ case class ZoneMapPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       val bloomPass = blooms.get(name) match {
         case Some(cols) => eqs.forall { case (column, (hashed, want)) =>
           cols.get(column) match {
-            case Some((vt, m, k, words)) if vt == want =>
-              graft.catalog.LakeCatalog.bloomMightContain(m, k, words, hashed)
+            case Some(b) if b.vtype == want =>
+              graft.catalog.LakeCatalog.bloomMightContain(b.m, b.k, b.words, hashed)
             case _ => true // not indexed / wrong normalization: must-scan
           }
         }
@@ -136,40 +142,6 @@ case class ZoneMapPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       Map.empty[String, String], Some(rel.dataSchema))
     Filter(cond, lr.copy(relation =
       rel.copy(location = idx)(spark)))
-  }
-
-  /** file-basename → column → (min, max) from the manifest-stats sidecar
-    * (same JSON lines [[graft.catalog.LakeCatalog]] writes at commit). */
-  private def sidecarBounds(p: java.nio.file.Path)
-      : Map[String, Map[String, (Double, Double)]] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    import scala.jdk.CollectionConverters._
-    Files.readAllLines(p).asScala.filter(_.nonEmpty).flatMap { line =>
-      val j = JsonMethods.parse(line)
-      (j \ "file") match {
-        case JString(f) =>
-          val cols = (j \ "bounds") match {
-            case JObject(fields) => fields.collect {
-              case (c, JArray(List(lo, hi))) =>
-                def d(v: JValue): Double = v match {
-                  case JDouble(x) => x
-                  case JInt(x) => x.toDouble
-                  case JDecimal(x) => x.toDouble
-                  case _ => Double.NaN
-                }
-                c -> (d(lo), d(hi))
-            }.toMap.filter { case (_, (lo, hi)) =>
-              // a malformed/NaN bound must widen to must-scan, never prune
-              java.lang.Double.isFinite(lo) && java.lang.Double.isFinite(hi)
-            }
-            case _ => Map.empty[String, (Double, Double)]
-          }
-          val base = f.substring(f.lastIndexOf('/') + 1)
-          Seq(base -> cols)
-        case _ => Seq.empty
-      }
-    }.toMap
   }
 }
 

@@ -8,16 +8,113 @@ matching SQL from <verifyOutDir>/oracle_sql.json in DuckDB against the raw
 tables in <sfDir>, and compares: row count, column names/types, and values
 (columns sorted by name, rows sorted by all columns, doubles compared exactly
 after float64 cast — mirroring a hash compare).
+
+The DuckDB side runs in a worker process, under DuckDB's memory_limit
+(ORACLE_MEMORY_LIMIT), a hard cap on the worker's resident memory
+(ORACLE_RSS_CAP_BYTES) and a per-query timeout (ORACLE_TIMEOUT_S). A query
+that breaks a limit, or a worker that dies, is a FAIL with the reason; the
+worker is restarted and the remaining queries are still checked.
 """
-import sys, json, glob, os
+import sys, json, glob, os, pickle, select, shutil, subprocess, tempfile, time
 import duckdb
 import pandas as pd
 import numpy as np
+
+ORACLE_MEMORY_LIMIT = "3GB"
+ORACLE_RSS_CAP_BYTES = 6 * 2**30
+ORACLE_TIMEOUT_S = 300
 
 def load_tables(con, sf_dir):
     for f in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.basename(f)[:-len(".parquet")]
         con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{f}')")
+
+def rss_bytes(pid):
+    """Resident set size of a live process, from /proc (0 if unreadable)."""
+    try:
+        with open(f"/proc/{pid}/status") as fh:
+            for line in fh:
+                if line.startswith("VmRSS:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return 0
+
+
+def worker_main(sf_dir, out_dir, result_path):
+    """Run oracle queries named one per stdin line; for each, pickle the
+    result to `result_path` and answer `ok`, or answer `err <message>`."""
+    oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit='{ORACLE_MEMORY_LIMIT}'")
+    con.execute(f"SET temp_directory='{os.path.dirname(result_path)}'")
+    load_tables(con, sf_dir)
+    for line in sys.stdin:
+        try:
+            df = con.execute(oracle[line.strip()]).df()
+            with open(result_path, "wb") as fh:
+                pickle.dump(df, fh)
+            print("ok", flush=True)
+        except Exception as e:
+            print("err " + " ".join(str(e).split()), flush=True)
+
+
+class OracleWorker:
+    """One worker process at a time, replaced whenever a query kills it or
+    breaks a limit."""
+
+    def __init__(self, sf_dir, out_dir, timeout_s=ORACLE_TIMEOUT_S,
+                 rss_cap=ORACLE_RSS_CAP_BYTES):
+        self.args = (sf_dir, out_dir)
+        self.timeout_s, self.rss_cap = timeout_s, rss_cap
+        self.tmp = tempfile.mkdtemp(prefix="check_oracle_")
+        self.result = os.path.join(self.tmp, "result.pkl")
+        self.proc = None
+
+    def _start(self):
+        self.proc = subprocess.Popen(
+            [sys.executable, os.path.abspath(__file__), "--worker", *self.args, self.result],
+            stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True, bufsize=1)
+
+    def _kill(self):
+        if self.proc is not None:
+            self.proc.kill()
+            self.proc.wait()
+            self.proc = None
+
+    def run(self, name):
+        """(DataFrame, None) or (None, reason)."""
+        if self.proc is None:
+            self._start()
+        self.proc.stdin.write(name + "\n")
+        self.proc.stdin.flush()
+        deadline = time.monotonic() + self.timeout_s
+        while True:
+            ready, _, _ = select.select([self.proc.stdout], [], [], 0.2)
+            if ready:
+                line = self.proc.stdout.readline()
+                if not line:
+                    rc = self.proc.wait()
+                    self.proc = None
+                    return None, f"oracle worker died (exit {rc}{', killed by signal' if rc < 0 else ''})"
+                status, _, msg = line.rstrip("\n").partition(" ")
+                if status != "ok":
+                    return None, f"oracle SQL error: {msg}"
+                with open(self.result, "rb") as fh:
+                    return pickle.load(fh), None
+            rss = rss_bytes(self.proc.pid)
+            if rss > self.rss_cap:
+                self._kill()
+                return None, (f"oracle exceeded memory: worker RSS {rss / 2**30:.2f} GB "
+                              f"> cap {self.rss_cap / 2**30:.2f} GB")
+            if time.monotonic() > deadline:
+                self._kill()
+                return None, f"oracle timed out after {self.timeout_s} s"
+
+    def close(self):
+        self._kill()
+        shutil.rmtree(self.tmp, ignore_errors=True)
+
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -69,8 +166,7 @@ def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     json_out = sys.argv[3] if len(sys.argv) > 3 else None
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    con = duckdb.connect()
-    load_tables(con, sf_dir)
+    worker = OracleWorker(sf_dir, out_dir)
     n_pass = n_fail = 0
     report = {}
     result_dirs = sorted(d for d in os.listdir(out_dir)
@@ -85,13 +181,11 @@ def main():
         if name not in oracle:
             print(f"rows {name}: {len(spark_df)} rows (no oracle — rows-only)")
             continue
-        try:
-            duck_df = con.execute(oracle[name]).df()
-        except Exception as e:
+        duck_df, err = worker.run(name)
+        if err is not None:
             report[name] = {"pass": False, "spark_rows": len(spark_df),
-                            "oracle_rows": None,
-                            "problems": [f"oracle SQL error: {e}"]}
-            print(f"FAIL {name}: oracle SQL error: {e}"); n_fail += 1; continue
+                            "oracle_rows": None, "problems": [err]}
+            print(f"FAIL {name}: {err}", flush=True); n_fail += 1; continue
         problems = compare(name, spark_df, duck_df)
         hard = [p for p in problems if not p.startswith("DTYPE-WARN")]
         report[name] = {"pass": not hard, "spark_rows": len(spark_df),
@@ -102,6 +196,7 @@ def main():
             warn = "; ".join(p for p in problems if p.startswith("DTYPE-WARN"))
             print(f"PASS {name} ({len(spark_df)} rows)" + (f" [{warn}]" if warn else ""))
             n_pass += 1
+    worker.close()
     missing = sorted(set(oracle) - set(result_dirs))
     for name in missing:
         report[name] = {"pass": False, "spark_rows": 0, "oracle_rows": None,
@@ -115,4 +210,7 @@ def main():
     sys.exit(1 if n_fail else 0)
 
 if __name__ == "__main__":
-    main()
+    if len(sys.argv) == 5 and sys.argv[1] == "--worker":
+        worker_main(*sys.argv[2:])
+    else:
+        main()
