@@ -2420,9 +2420,19 @@ class LakeCatalog(spark: SparkSession, root: String) {
 
   /** RENAME COLUMN — metadata-only (one sidecar line); zero files move.
     * Subsequent appends write the NEW name; [[loadRenamed]] reconciles the
-    * generations. Chained renames compose in recording order. */
+    * generations. Chained renames compose in recording order. A CHECK
+    * constraint over the column is rewritten to name the new column. */
   def renameColumn(ns: String, table: String, oldName: String,
                    newName: String): Unit = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    checkConstraints(ns, table).foreach { case (name, pred) =>
+      val parsed = spark.sessionState.sqlParser.parseExpression(pred)
+      val renamed = parsed.transform {
+        case a: UnresolvedAttribute if a.nameParts.size == 1 &&
+            a.nameParts.head.equalsIgnoreCase(oldName) => UnresolvedAttribute.quoted(newName)
+      }
+      if (renamed != parsed) setProperty(ns, table, s"check.$name", renamed.sql)
+    }
     Sidecar.append(sidecar(ns, table, Sidecar.Renames), Seq(Sidecar.renameLine(
       Sidecar.Rename(oldName, newName, currentVersion(ns, table)))))
   }

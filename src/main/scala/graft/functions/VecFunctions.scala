@@ -205,5 +205,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // histogram metadata — the catalog CBO reaching the planner); guarded
     // to fire only on filtered scans of analyzed graft tables
     ext.injectOptimizerRule(s => graft.plans.CboRouteRule(s))
+    // lake tables as Catalyst relations for the gateway statement bound on
+    // the analyzing thread; a no-op everywhere else
+    ext.injectHintResolutionRule(_ => graft.catalog.LakeRelationRule)
   }
 }

@@ -100,10 +100,8 @@ object CatalogOps9 {
     * direct DuckDB join. */
   def cCboPlanner(spark: SparkSession, dir: String): DataFrame = {
     import graft.plans.CboRouteRule
-    // dedicated warehouse: the gateway SELECT path registers a view per
-    // catalog table, and the SHARED scratch warehouse accumulates dozens
-    // from other ops — 2 SELECTs × ~40 loadRenamed footer reads measured
-    // 16 s warm at sf0.1. The op's own two tables keep registration O(1).
+    // dedicated warehouse: the op's two tables, apart from the dozens the
+    // SHARED scratch warehouse accumulates from other ops
     val cat = new LakeCatalog(spark,
       s"${System.getProperty("java.io.tmpdir")}/graft_cbop_wh")
     val gw = new graft.catalog.SqlGateway(spark, cat)
@@ -354,8 +352,7 @@ object CatalogOps9 {
     * DuckDB's direct semi/anti joins; results are route-invariant by
     * construction. */
   def cCboSemijoin(spark: SparkSession, dir: String): DataFrame = {
-    // dedicated warehouse: gateway SELECTs register a view per catalog
-    // table (the c_cbo_planner 16 s lesson — PROFILE_r09)
+    // dedicated warehouse, as in c_cbo_planner
     val cat = new LakeCatalog(spark,
       s"${System.getProperty("java.io.tmpdir")}/graft_cbosj_wh")
     val gw = new graft.catalog.SqlGateway(spark, cat)

@@ -90,9 +90,10 @@ class McpServer(spark: SparkSession, warehouse: String, maxRows: Int = 1000) {
           "row-level insert/delete feed between two snapshots, deletion-" +
           "vector- and equality-delete-aware)"),
       tool("query_table", "Execute a query on lake tables",
-        "Table reads and writes: any Spark SELECT over registered tables " +
-          "(joins, aggregates, window functions), with time travel via " +
-          "FROM t VERSION AS OF v or FROM t TAG AS OF name; " +
+        "Table reads and writes: any Spark SELECT over lake tables named " +
+          "[ns.]t (joins, aggregates, window functions), with time travel via " +
+          "FROM [ns.]t VERSION AS OF v or FROM [ns.]t TAG AS OF name and the " +
+          "change feed via FROM [ns.]t CHANGES BETWEEN v1 AND v2; " +
           "CREATE TABLE [IF NOT EXISTS] [ns.]t (col type, ...); " +
           "INSERT INTO [ns.]t [(cols)] VALUES (...); " +
           "DELETE FROM [ns.]t WHERE cond (copy-on-write); " +
