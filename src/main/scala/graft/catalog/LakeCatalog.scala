@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_list, count, expr, floor, greatest, input_file_name, least, lit, max, min, pmod, shiftleft, slice, sort_array, substring_index, sum, when, xxhash64}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_list, count, expr, floor, greatest, least, lit, max, min, pmod, shiftleft, slice, sort_array, substring_index, sum, when, xxhash64}
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -13,8 +13,8 @@ import scala.jdk.CollectionConverters._
   * Layout: `<root>/<namespace>/<table>/ *.parquet` plus per-table JSON
   * sidecars beside the table directory — the commit log, refs, manifest
   * file stats, deletion vectors, equality deletes, column stats,
-  * histograms, blooms, NDV sketches, renames, table meta, hidden spec and
-  * schema evolution — keeping an Iceberg-shaped metadata surface so a real
+  * histograms, blooms, NDV sketches, table meta (with the schema history)
+  * and hidden spec — keeping an Iceberg-shaped metadata surface so a real
   * Iceberg catalog can be swapped in where the runtime jars exist. The kind
   * table, file names, IO and JSON shapes of those sidecars live in
   * [[Sidecar]]; this class reads and writes them only through it. A flat
@@ -188,6 +188,15 @@ class LakeCatalog(spark: SparkSession, root: String) {
       case None => snaps.lastOption.map(_._2)
     }
   }
+
+  /** The current snapshot's files; for a table without a snapshot log, the
+    * parquet files in its directory. */
+  private def liveFiles(ns: String, table: String): Seq[String] =
+    currentFiles(ns, table).getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+
+  /** The version number the next commit to the log takes. */
+  private def nextVersion(ns: String, table: String): Int =
+    snapshots(ns, table).map(_._1).maxOption.fold(0)(_ + 1)
 
   // --------------------------------------------------------- branch refs
   // The `refs` sidecar: {"main": v, "<branch>": v'} — the Iceberg
@@ -503,19 +512,60 @@ class LakeCatalog(spark: SparkSession, root: String) {
     }
   }
 
-  private def readFiles(ns: String, table: String, files: Seq[String]): DataFrame = {
+  /** The table's meta sidecar, parsed (None for a table without one). */
+  private def metaOf(ns: String, table: String): Option[Sidecar.TableMeta] =
+    Sidecar.metaObject(sidecar(ns, table, Sidecar.Meta)).map(Sidecar.meta)
+
+  /** The one scan of a table's data files. The rows take the schema of
+    * snapshot `asOf`, or the current schema when None. Each file is read
+    * under the schema its commit recorded in `filestats` and projected onto
+    * that target by field id: a renamed column takes its new name, a column
+    * added later reads as its default. When every file has the target
+    * schema, always so for a table whose schema never changed, the plan is
+    * one plain parquet scan. `pos` adds the file basename and row position
+    * that deletion vectors key on. A table without a schema history is read
+    * as its files are. */
+  private def scan(ns: String, table: String, files: Seq[String],
+                   asOf: Option[Int] = None, pos: Boolean = false): DataFrame = {
     val dir = tablePath(ns, table)
-    if (files.isEmpty) // preserve schema for an empty snapshot
-      spark.read.parquet(dir).limit(0)
-    else readParquet(files.map(f => s"$dir/$f"))
+    def read(fs: Seq[String]): DataFrame = {
+      val df = readParquet(fs.map(f => s"$dir/$f"))
+      if (!pos) df
+      else df.select(col("*"),
+        substring_index(col("_metadata.file_path"), "/", -1).as("__dv_file"),
+        col("_metadata.row_index").as("__dv_pos"))
+    }
+    val meta = metaOf(ns, table)
+    meta.flatMap(m => asOf.fold(m.schema)(m.schemaAt)) match {
+      case None if files.isEmpty => spark.read.parquet(dir).limit(0)
+      case None => read(files)
+      case Some(target) if files.isEmpty =>
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], target.struct)
+      case Some(target) =>
+        val schemas = meta.get.schemas
+        val written: Map[String, Int] =
+          if (schemas.size == 1) Map.empty
+          else Sidecar.fileStats(sidecar(ns, table, Sidecar.FileStats))
+            .flatMap(s => s.schema.map(s.file -> _)).toMap
+        val gens = files.groupBy(f => written.getOrElse(f, target.id))
+        val mapped = (gens - target.id).toSeq.sortBy(_._1).map { case (id, fs) =>
+          val names = schemas.find(_.id == id).toSeq.flatMap(_.fields)
+            .map(f => f.id -> f.name).toMap
+          read(fs).select(target.fields.map(f => names.get(f.id).fold(
+            f.default.fold(lit(null))(expr).cast(f.dataType))(col).as(f.name)) ++
+            (if (pos) Seq(col("__dv_file"), col("__dv_pos")) else Nil): _*)
+        }
+        (gens.get(target.id).map(read).toSeq ++ mapped).reduce(_ unionByName _)
+    }
   }
 
-  /** Time travel: the table as of snapshot `v` (deletion vectors committed
-    * at or before `v` applied — see the merge-on-read section). */
+  /** Time travel: the table as of snapshot `v`, under the schema it was
+    * committed with (deletion vectors committed at or before `v` applied —
+    * see the merge-on-read section). */
   def loadSnapshot(ns: String, table: String, v: Int): DataFrame = {
     val files = snapshots(ns, table).find(_._1 == v)
       .getOrElse(throw new IllegalArgumentException(s"no snapshot $v for $ns.$table"))._2
-    readFilesDv(ns, table, files, v)
+    readFilesDv(ns, table, files, v, asOf = Some(v))
   }
 
   /** Incremental append scan (Iceberg incremental read): ONLY the rows in
@@ -534,7 +584,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
       .getOrElse(throw new IllegalArgumentException(s"no snapshot $v for $ns.$table"))
       ._2.toSet
     val added = (filesOf(toV) -- filesOf(fromV)).toSeq.sorted
-    readFiles(ns, table, added)
+    scan(ns, table, added)
   }
 
   /** Tag a snapshot (Iceberg tag = immutable named ref — a release marker).
@@ -711,20 +761,13 @@ class LakeCatalog(spark: SparkSession, root: String) {
     refs(ns, table).get("main")
       .orElse(snapshots(ns, table).map(_._1).maxOption).getOrElse(0)
 
-  /** `files` scanned with the file name + row position the DV path keys on. */
-  private def readFilesWithPos(dir: String, files: Seq[String]): DataFrame =
-    readParquet(files.map(f => s"$dir/$f"))
-      .select(col("*"),
-        substring_index(col("_metadata.file_path"), "/", -1).as("__dv_file"),
-        col("_metadata.row_index").as("__dv_pos"))
-
-  /** Read `files` minus every ROW-LEVEL delete visible at version `atV`:
-    * positional deletion vectors and equality deletes alike (the shared
-    * [[subtractRowDeletes]] tail). No sidecar (or none matching these
-    * files) ⇒ the plain read — existing tables pay nothing, and the plan
-    * stays a bare parquet scan. */
+  /** Read `files` ([[scan]], under the schema of snapshot `asOf`) minus
+    * every ROW-LEVEL delete visible at version `atV`: positional deletion
+    * vectors and equality deletes alike (the shared [[subtractRowDeletes]]
+    * tail). No sidecar (or none matching these files) ⇒ the plain read —
+    * existing tables pay nothing, and the plan stays a bare parquet scan. */
   private def readFilesDv(ns: String, table: String, files: Seq[String],
-                          atV: Int): DataFrame = {
+                          atV: Int, asOf: Option[Int] = None): DataFrame = {
     // DV lines key on the part-file BASENAME (what the scan-path anti-join
     // sees); the committed names may be `../src/<base>` clone references
     val inScan = files.map(f => Paths.get(f).getFileName.toString).toSet
@@ -736,8 +779,9 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val eqRelevant = eqKeyFilePairs(eqLive, inScan,
       fileAddedVersion(ns, table)).nonEmpty ||
       eqRefApplicable(eqLive, inScan, fileAddedVersion(ns, table)).nonEmpty
-    if (pairs.isEmpty && !dvRefRelevant && !eqRelevant) readFiles(ns, table, files)
-    else visibleWithPos(ns, table, files, atV).drop("__dv_file", "__dv_pos")
+    if (pairs.isEmpty && !dvRefRelevant && !eqRelevant) scan(ns, table, files, asOf)
+    else subtractRowDeletes(scan(ns, table, files, asOf, pos = true), ns, table, files, atV)
+      .drop("__dv_file", "__dv_pos")
   }
 
   /** Positions per MOR commit above which the payload is written as
@@ -852,8 +896,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * delete. */
   def deleteWhereMor(ns: String, table: String, cond: Column): Long = {
     requireRowLevel(ns, table, "DELETE MOR (deletion vectors)")
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    val cur = liveFiles(ns, table)
     if (cur.isEmpty) return 0L
     val v = currentVersion(ns, table)
     // visible scan (DV- AND eq-aware): a row already dead by either
@@ -865,7 +908,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val hits0 = visibleWithPos(ns, table, cur, v)
       .where(coalesce(cond, lit(false))) // 3VL: NULL predicate deletes nothing
       .select(col("__dv_file"), col("__dv_pos"))
-    val nextV = snapshots(ns, table).map(_._1).maxOption.getOrElse(-1) + 1
+    val nextV = nextVersion(ns, table)
     val tok = java.util.UUID.randomUUID().toString
     // per-file marked counts: FILE-scale metadata, never row-scale payload
     // (the shared size-gated arm — a delete matching billions of rows
@@ -898,8 +941,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
   def updateWhereMor(ns: String, table: String, cond: Column,
                      setCol: String, setExpr: Column): Long = {
     requireRowLevel(ns, table, "UPDATE MOR (deletion vectors + delta files)")
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    val cur = liveFiles(ns, table)
     if (cur.isEmpty) return 0L
     val v = currentVersion(ns, table)
     // ONE DV-aware matched scan, MATERIALIZED (localCheckpoint) so the
@@ -916,7 +958,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     // DV-mark the superseded physical rows — the shared size-gated arm
     // ([[writeDvPayload]]): a sparse update stays inline-sidecar; a massive
     // one writes parquet delete files and never transits the driver
-    val nextV = snapshots(ns, table).map(_._1).maxOption.getOrElse(-1) + 1
+    val nextV = nextVersion(ns, table)
     val tok = java.util.UUID.randomUUID().toString
     val counts = writeDvPayload(ns, table,
       matched.select(col("__dv_file"), col("__dv_pos")), nextV, tok)
@@ -1016,7 +1058,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
         fs.map(f => Paths.get(f).getFileName.toString -> v) }
       .groupBy(_._1).map { case (f, vs) => f -> vs.map(_._2).min }
 
-  /** Subtract from `df` (a [[readFilesWithPos]]-shaped frame over `files`)
+  /** Subtract from `df` (a position-carrying [[scan]] of `files`)
     * every row-level delete visible at `atV`: positional deletion vectors
     * by (file, pos) anti-join, equality deletes by key anti-join scoped to
     * files committed strictly before each delete. The shared tail of every
@@ -1044,7 +1086,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
       val keyed = spark.createDataFrame(ps.map(p => (p._2, p._3)))
         .toDF("__eq_key", "__eq_file")
       df = df.join(broadcast(keyed),
-        col(kc).cast("string") === col("__eq_key") &&
+        eqKey(ns, table, df0, kc).cast("string") === col("__eq_key") &&
           col("__dv_file") === col("__eq_file"), "left_anti")
     }
     // ref-shaped equality deletes: keys read distributed from their parquet
@@ -1054,11 +1096,22 @@ class LakeCatalog(spark: SparkSession, root: String) {
         val keys = spark.read.parquet(s"$root/${e.ref.get}")
           .select(col("__eq_key"))
         df = df.join(keys,
-          col(e.col).cast("string") === col("__eq_key") &&
+          eqKey(ns, table, df0, e.col).cast("string") === col("__eq_key") &&
             col("__dv_file").isin(applicable.toSeq.sorted: _*), "left_anti")
       }
     df
   }
+
+  /** The column of `df` an equality delete recorded on column `name`
+    * matches: the same field id, under the name `df`'s schema gives it. */
+  private def eqKey(ns: String, table: String, df: DataFrame, name: String): Column =
+    if (df.columns.contains(name)) col(name)
+    else {
+      val fields = metaOf(ns, table).toSeq.flatMap(_.schemas.reverse.flatMap(_.fields))
+      val id = fields.find(_.name == name).map(_.id)
+      fields.find(f => id.contains(f.id) && df.columns.contains(f.name))
+        .fold(col(name))(f => col(f.name))
+    }
 
   /** Ref-shaped equality-delete lines paired with their applicable files
     * restricted to `inScan` (metadata scale) — the scope/applies expansion
@@ -1085,8 +1138,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * a row the other mechanism already killed. */
   private def visibleWithPos(ns: String, table: String, files: Seq[String],
                              atV: Int): DataFrame =
-    subtractRowDeletes(readFilesWithPos(tablePath(ns, table), files),
-      ns, table, files, atV)
+    subtractRowDeletes(scan(ns, table, files, pos = true), ns, table, files, atV)
 
   /** DELETE WHERE key IN (...), EQUALITY merge-on-read ([[deleteWhereMor]]'s
     * keyed sibling — Iceberg v2 equality delete files, the shape a
@@ -1103,8 +1155,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
   def deleteWhereEq(ns: String, table: String, keyCol: String,
                     keys: Seq[Any]): Long = {
     requireRowLevel(ns, table, "DELETE EQ (equality-delete files)")
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    val cur = liveFiles(ns, table)
     if (cur.isEmpty || keys.isEmpty) return 0L
     val v = currentVersion(ns, table)
     val keyStrs = keys.map(String.valueOf).distinct
@@ -1114,7 +1165,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))
       .sortBy(_._1)
-    val nextV = snapshots(ns, table).map(_._1).maxOption.getOrElse(-1) + 1
+    val nextV = nextVersion(ns, table)
     val tok = java.util.UUID.randomUUID().toString
     appendEqDelete(ns, table, nextV, tok, keyCol, keyStrs, None, hits)
     val committed = commitSnapshot(ns, table, cur, expectedBase = Some(v),
@@ -1137,8 +1188,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
   def deleteWhereEq(ns: String, table: String, keyCol: String,
                     keys: DataFrame): Long = {
     requireRowLevel(ns, table, "DELETE EQ (equality-delete files)")
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    val cur = liveFiles(ns, table)
     if (cur.isEmpty) return 0L
     // NULL keys never match (SQL equality semantics) — same as inline;
     // pinned once so the count, the payload write, and the matched-count
@@ -1157,7 +1207,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
       .join(keyDf, col(keyCol).cast("string") === col("__eq_key"), "left_semi")
       .groupBy(col("__dv_file")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
-    val nextV = snapshots(ns, table).map(_._1).maxOption.getOrElse(-1) + 1
+    val nextV = nextVersion(ns, table)
     val tok = java.util.UUID.randomUUID().toString
     val refRel = s"$ns/${table}_deletes/eq-$tok"
     keyDf.write.parquet(s"$root/$refRel")
@@ -1187,20 +1237,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
   def mergeMor(ns: String, table: String, rawSource: DataFrame,
                key: String): (Long, Long) = {
     requireRowLevel(ns, table, "MERGE MOR (deletion vectors + delta files)")
-    val source = {
-      val others = rawSource.columns.filterNot(_ == key)
-      if (others.isEmpty) rawSource.distinct()
-      else {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col(key))
-          .orderBy(others.map(c => col(c).desc_nulls_last): _*)
-        rawSource.withColumn("_graft_rn",
-            org.apache.spark.sql.functions.row_number().over(w))
-          .where(col("_graft_rn") === 1).drop("_graft_rn")
-      }
-    }
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    val source = onePerKey(rawSource, key)
+    val cur = liveFiles(ns, table)
     val v = currentVersion(ns, table)
     val srcKeys = broadcast(source.select(col(key)).distinct())
     val matched = visibleWithPos(ns, table, cur, v)
@@ -1216,7 +1254,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     // DV-mark the superseded target copies — the shared size-gated arm
     // ([[writeDvPayload]]): a huge matched set writes parquet delete files
     // instead of transiting the driver, same as DELETE/UPDATE MOR
-    val nextV = snapshots(ns, table).map(_._1).maxOption.getOrElse(-1) + 1
+    val nextV = nextVersion(ns, table)
     val tok = java.util.UUID.randomUUID().toString
     val counts = writeDvPayload(ns, table,
       matched.select(col("__dv_file"), col("__dv_pos")), nextV, tok)
@@ -1249,23 +1287,10 @@ class LakeCatalog(spark: SparkSession, root: String) {
       return (0L, 0L)
     val known = changes.where(col(opCol).isin("u", "d"))
     val deleteKeys = known.where(col(opCol) === "d").select(col(key)).distinct()
-    val upserts = {
-      // delete wins over upsert for the same key; duplicates collapse
-      val u = known.where(col(opCol) === "u").drop(opCol)
-        .join(broadcast(deleteKeys), Seq(key), "left_anti")
-      val others = u.columns.filterNot(_ == key)
-      if (others.isEmpty) u.distinct()
-      else {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col(key))
-          .orderBy(others.map(c => col(c).desc_nulls_last): _*)
-        u.withColumn("_graft_rn",
-            org.apache.spark.sql.functions.row_number().over(w))
-          .where(col("_graft_rn") === 1).drop("_graft_rn")
-      }
-    }
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    // delete wins over upsert for the same key; duplicates collapse
+    val upserts = onePerKey(known.where(col(opCol) === "u").drop(opCol)
+      .join(broadcast(deleteKeys), Seq(key), "left_anti"), key)
+    val cur = liveFiles(ns, table)
     val v = currentVersion(ns, table)
     // the batch's key set IS the equality-delete payload (batch scale)
     val keyStrs = known.select(col(key).cast("string")).distinct()
@@ -1282,7 +1307,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     // the end re-ran the whole dedup-window pipeline as a second action
     val (deltaFiles, nUpserts) = writeNewFilesCounted(ns, table,
       upserts.select(tcols.map(col).toSeq: _*))
-    val nextV = snapshots(ns, table).map(_._1).maxOption.getOrElse(-1) + 1
+    val nextV = nextVersion(ns, table)
     val tok = java.util.UUID.randomUUID().toString
     // … tokened equality-delete line second …
     if (keyStrs.nonEmpty)
@@ -1477,26 +1502,26 @@ class LakeCatalog(spark: SparkSession, root: String) {
         newDv.exists(_._1 == b) || newDvRefs.exists(_.nfiles.contains(b)) ||
           eqPairs.exists(_._3 == b) || eqRefs.exists(_._2.contains(b))
       }
-      if (cand.isEmpty) readFiles(ns, table, Seq.empty)
+      if (cand.isEmpty) scan(ns, table, Seq.empty)
       else {
-        val scan = readFilesWithPos(tablePath(ns, table), cand)
+        val rows = scan(ns, table, cand, pos = true)
         // rows targeted by a NEW row-level delete …
         val dvHit =
           if (newDv.isEmpty) None
-          else Some(scan.join(
+          else Some(rows.join(
             broadcast(spark.createDataFrame(newDv).toDF("__dv_file", "__dv_pos")),
             Seq("__dv_file", "__dv_pos"), "left_semi"))
         // … or by a ref-shaped delete file (payload joins distributed)
         val dvRefHit = dvRefDf(newDvRefs).map(refDf =>
-          scan.join(refDf, Seq("__dv_file", "__dv_pos"), "left_semi"))
+          rows.join(refDf, Seq("__dv_file", "__dv_pos"), "left_semi"))
         val eqHit =
           if (eqPairs.isEmpty) None
           else Some(eqPairs.groupBy(_._1).toSeq.sortBy(_._1)
             .map { case (kc, ps) =>
               val keyed = spark.createDataFrame(ps.map(p => (p._2, p._3)))
                 .toDF("__eq_key", "__eq_file")
-              scan.join(broadcast(keyed),
-                col(kc).cast("string") === col("__eq_key") &&
+              rows.join(broadcast(keyed),
+                eqKey(ns, table, rows, kc).cast("string") === col("__eq_key") &&
                   col("__dv_file") === col("__eq_file"), "left_semi")
             }.reduce(_ unionByName _))
         val eqRefHit =
@@ -1504,8 +1529,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
           else Some(eqRefs.map { case (e, applicable) =>
             val keys = spark.read.parquet(s"$root/${e.ref.get}")
               .select(col("__eq_key"))
-            scan.join(keys,
-              col(e.col).cast("string") === col("__eq_key") &&
+            rows.join(keys,
+              eqKey(ns, table, rows, e.col).cast("string") === col("__eq_key") &&
                 col("__dv_file").isin(applicable.toSeq.sorted: _*), "left_semi")
           }.reduce(_ unionByName _))
         val died = (dvHit.toSeq ++ dvRefHit.toSeq ++ eqHit.toSeq ++ eqRefHit.toSeq)
@@ -1620,17 +1645,21 @@ class LakeCatalog(spark: SparkSession, root: String) {
     } finally r.close()
   }
 
-  /** Returns the total row count across `files` (from the same footer
-    * reads that feed the sidecar — pure metadata IO). */
+  /** Records each file's rows, bounds, byte size and the id of the current
+    * schema it was written under. Returns the total row count across
+    * `files` (from the same footer reads that feed the sidecar — pure
+    * metadata IO). */
   private def recordFileStats(ns: String, table: String, files: Seq[String]): Long =
     if (files.isEmpty) 0L
     else {
       val dir = Paths.get(tablePath(ns, table))
+      val schemaId = metaOf(ns, table).flatMap(_.schema).map(_.id)
       var total = 0L
       val lines = files.map { f =>
         val (rows, bounds) = footerInfo(dir.resolve(f))
         total += rows
-        Sidecar.fileStatLine(f, rows, bounds.toSeq.sortBy(_._1))
+        Sidecar.fileStatLine(f, rows, Files.size(dir.resolve(f)), schemaId,
+          bounds.toSeq.sortBy(_._1))
       }
       Sidecar.append(sidecar(ns, table, Sidecar.FileStats), lines)
       total
@@ -1681,12 +1710,10 @@ class LakeCatalog(spark: SparkSession, root: String) {
   def recordBlooms(ns: String, table: String, colName: String,
                    mBits: Int = 0, k: Int = 4): Unit = {
     import org.apache.spark.sql.functions._
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    val cur = liveFiles(ns, table)
       .filter(f => fileStats(ns, table).get(f).forall(_ > 0))
     if (cur.isEmpty) return
-    val dir = tablePath(ns, table)
-    val raw = spark.read.parquet(cur.map(f => s"$dir/$f"): _*)
+    val raw = scan(ns, table, cur, pos = true)
     // STRING keys hash through the portable scalar polyhash first (r9 —
     // the puffin analog covers the scattered-string-key case: doc ids,
     // urls, uuids); integral keys index their own value. The line records
@@ -1697,9 +1724,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val keyExpr =
       if (isStringKey) graft.functions.Poly.stringHash(col(colName))
       else col(colName).cast("long")
-    val keyed = raw
-      .select(substring_index(col("_metadata.file_path"), "/", -1).as("f"),
-        keyExpr.as("v"))
+    val keyed = raw.select(col("__dv_file").as("f"), keyExpr.as("v"))
       .where(col("v").isNotNull)
     val vtype = if (isStringKey) "s" else "i"
     val m: Int =
@@ -1803,8 +1828,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
   private def bloomPruneHashed(ns: String, table: String, column: String,
                                hashed: Long, vtype: String)
       : (Seq[String], Seq[String]) = {
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    val cur = liveFiles(ns, table)
     val blooms = fileBlooms(ns, table, column)
     val stats = fileStats(ns, table)
     cur.filter(f => stats.get(f).forall(_ > 0)).partition { f =>
@@ -1840,8 +1864,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * are conservatively read. Metadata-only — no data IO here. */
   def pruneFiles(ns: String, table: String, column: String,
                  lo: Double, hi: Double): (Seq[String], Seq[String]) = {
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    val cur = liveFiles(ns, table)
     val bounds = fileBounds(ns, table)
     val stats = fileStats(ns, table)
     // DATA files only: the v0 schema placeholder (0 recorded rows) is
@@ -1864,8 +1887,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * file is a small hyper-rectangle and BOTH edges cut. */
   def pruneFilesBox(ns: String, table: String,
                     box: Seq[(String, Double, Double)]): (Seq[String], Seq[String]) = {
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    val cur = liveFiles(ns, table)
     val bounds = fileBounds(ns, table)
     val stats = fileStats(ns, table)
     cur.filter(f => stats.get(f).forall(_ > 0)).partition { f =>
@@ -1899,9 +1921,11 @@ class LakeCatalog(spark: SparkSession, root: String) {
   }
 
   /** COUNT(*) served purely from manifest stats when every current file has
-    * a recorded count (always true for tables written through this catalog)
-    * — the metadata-only aggregate Iceberg answers without a scan. Returns
-    * None when any file predates the stats sidecar. */
+    * a recorded count and still has the byte size recorded with it (always
+    * true for untouched tables written through this catalog) — the
+    * metadata-only aggregate Iceberg answers without a scan. Returns None
+    * when any file predates the stats sidecar or was changed in place since
+    * its commit: the scan then reads (or fails on) the files themselves. */
   def countStar(ns: String, table: String): Option[Long] = {
     val dir = Paths.get(tablePath(ns, table))
     // hive-partitioned layouts keep rows in partition SUBDIRECTORIES the
@@ -1909,10 +1933,15 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val hasPartitionDirs = Files.isDirectory(dir) &&
       listDir(dir).exists(p => Files.isDirectory(p) && p.getFileName.toString.contains("="))
     val cur = currentFiles(ns, table).getOrElse(listParquet(dir))
-    val stats = fileStats(ns, table)
+    val lines = Sidecar.fileStats(sidecar(ns, table, Sidecar.FileStats))
+      .map(s => s.file -> s).toMap
+    def intact(f: String): Boolean = lines.get(f).exists { s =>
+      s.rows.isDefined && s.bytes.exists(b =>
+        try Files.size(dir.resolve(f)) == b catch { case _: java.io.IOException => false })
+    }
     // empty file list means "not a snapshot-logged catalog table here"
     // (flat single-file warehouse, alias, or missing) — never claim it
-    if (!hasPartitionDirs && cur.nonEmpty && cur.forall(stats.contains)) {
+    if (!hasPartitionDirs && cur.nonEmpty && cur.forall(intact)) {
       // merge-on-read deletes: manifest counts are PHYSICAL rows; subtract
       // the deletion-vector positions visible at the current version for
       // files in the current snapshot (still metadata-only — DV lines are
@@ -1932,7 +1961,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
       val eqDeleted = liveEqDeletes(ns, table, v)
         .flatMap(_.fileCounts)
         .collect { case (f, n) if inScan(f) => n }.sum
-      Some(cur.map(stats).sum - dvDeleted - eqDeleted)
+      Some(cur.flatMap(lines(_).rows).sum - dvDeleted - eqDeleted)
     } else None
   }
 
@@ -1942,10 +1971,16 @@ class LakeCatalog(spark: SparkSession, root: String) {
       case None => spark.read.parquet(tablePath(ns, table))
     }
 
+  /** The table's current schema, from its schema history; a table without
+    * one (the flat test-data warehouse) reports the schema its files read
+    * with. */
+  def tableSchema(ns: String, table: String): StructType =
+    metaOf(ns, table).flatMap(_.schema).fold(load(ns, table).schema)(_.struct)
+
   /** Normalized (column, type, nullable) schema rows
     * (reference: DESCRIBE TABLE, IcebergConnection.py:64-77). */
   def describe(ns: String, table: String): Seq[(String, String, Boolean)] =
-    load(ns, table).schema.fields.toSeq.map(f =>
+    tableSchema(ns, table).fields.toSeq.map(f =>
       (f.name, f.dataType.sql.toLowerCase, f.nullable))
 
   /** CREATE TABLE with a typed schema (reference maps STRING/INT/DOUBLE/
@@ -2094,20 +2129,19 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * driver — sketch payload, not data. */
   def recordNdvSketch(ns: String, table: String, colName: String,
                       k: Int = 64): Int = {
-    val dir = Paths.get(tablePath(ns, table))
-    val cur = currentFiles(ns, table).getOrElse(listParquet(dir))
+    val cur = liveFiles(ns, table)
     val have = ndvEntries(ns, table, colName).keySet
     val fresh = cur.filterNot(have).sorted
     if (fresh.isEmpty) return 0
     import org.apache.spark.sql.expressions.Window
-    val scan = spark.read.parquet(fresh.map(f => dir.resolve(f).toString): _*)
+    val sketches = scan(ns, table, fresh, pos = true)
       // NDV counts VALUES: NULLs are excluded up front (ADVICE r12 — a
       // NULL row would hash to NULL, survive the groupBy, rank first
       // under nulls-first ordering and NPE the getLong below; and both
       // engines' count(DISTINCT col) ignores NULLs, so excluding them is
       // also the correct estimate)
       .where(col(colName).isNotNull)
-      .select(input_file_name().as("__f"),
+      .select(col("__dv_file").as("__f"),
         graft.functions.Poly.stringHash(col(colName)).as("h"))
       .groupBy("__f", "h").agg(count(lit(1)).as("_n")) // distinct (file, hash)
       .withColumn("r", org.apache.spark.sql.functions.row_number().over(
@@ -2115,13 +2149,11 @@ class LakeCatalog(spark: SparkSession, root: String) {
       .where(col("r") <= k)
       .select(col("__f"), col("h"))
       .collect()
-      // input_file_name() may carry a URI scheme; the basename is the
-      // stable file identity the sidecar keys on
-      .groupBy(_.getString(0).split('/').last)
+      .groupBy(_.getString(0))
       .map { case (f, rows) => f -> rows.map(_.getLong(1)).sorted.toSeq }
     // an empty file gets an empty sketch
     Sidecar.append(sidecar(ns, table, Sidecar.Ndv), fresh.map(f =>
-      Sidecar.ndvLine(Sidecar.NdvSketch(f, colName, k, scan.getOrElse(f, Seq.empty)))))
+      Sidecar.ndvLine(Sidecar.NdvSketch(f, colName, k, sketches.getOrElse(f, Seq.empty)))))
     fresh.size
   }
 
@@ -2132,8 +2164,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * the estimate so the arithmetic text can be mirrored in SQL. */
   def ndvSketchMerged(ns: String, table: String, colName: String,
                       k: Int = 64): (Long, Long, Int, Int) = {
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    val cur = liveFiles(ns, table)
     val entries = ndvEntries(ns, table, colName)
     val covered = cur.count(entries.contains)
     val merged = cur.flatMap(f => entries.getOrElse(f, Seq.empty))
@@ -2301,26 +2332,6 @@ class LakeCatalog(spark: SparkSession, root: String) {
       currentFiles(ns, table).getOrElse(Seq.empty) ++ added)
   }
 
-  /** Zero-copy table clone (Delta SHALLOW CLONE / Iceberg snapshot-ref
-    * analog): a new table whose first snapshot REFERENCES the source's
-    * current data files (`../<src>/<file>` relative paths) — no data moves,
-    * clone cost is one metadata write regardless of table size. The clone
-    * then evolves independently: appends land in its own directory, and
-    * every COW mutation rewrites only touched files INTO the clone (source
-    * files are immutable by construction, so the source can never observe
-    * the clone's changes). Manifest metadata travels with the clone — the
-    * stats/bounds sidecar lines are rekeyed onto the `../` references so
-    * countStar and zone-map pruning stay metadata-only — and merge-on-read
-    * deletion vectors are inherited at clone version 0 (file keys stay
-    * basenames, which is what the DV anti-join matches on).
-    *
-    * Contract (same as Delta's shallow clone): the clone does NOT pin its
-    * source files against the SOURCE's own expiry/vacuum — expiring source
-    * history that the clone still references breaks the clone. Pass
-    * `deep = true` for the remedy when clones must outlive source
-    * retention: the referenced files are physically COPIED into the clone
-    * (cost ∝ data, paid once at clone time — Delta's deep clone), after
-    * which the two tables share nothing. */
   // --------------------------------------------------- row lineage (v3)
   // Iceberg v3 row lineage: every row carries a durable `_row_id`, assigned
   // at its FIRST commit and never re-issued. The flat warehouse derives the
@@ -2362,7 +2373,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
       files.map(f => (Paths.get(f).getFileName.toString,
         bases.getOrElse(f, 0L))))
       .toDF("__dv_file", "__base")
-    readFilesWithPos(tablePath(ns, table), files)
+    scan(ns, table, files, pos = true)
       .join(broadcast(baseDf), Seq("__dv_file"))
       .withColumn("_row_id", col("__base") + col("__dv_pos"))
       .drop("__dv_file", "__dv_pos", "__base")
@@ -2400,84 +2411,42 @@ class LakeCatalog(spark: SparkSession, root: String) {
     imported.size
   }
 
-  // ------------------------------------------------- column rename (evolution)
-  // Iceberg renames columns by FIELD ID: a pure metadata operation, after
-  // which files written before the rename still resolve (their physical
-  // column name maps to the new logical name at scan time) and no data is
-  // rewritten. The flat parquet warehouse has no field ids, so the same
-  // contract is kept with a rename sidecar recording (old, new, version):
-  // files committed at or before the rename version carry the OLD physical
-  // name and reconcile via a per-generation scan projection; files written
-  // after carry the new name natively. Scan cost is unchanged — the two
-  // generations are disjoint file lists read with their own (pushdown-
-  // friendly) schemas and unioned by name, which is exactly what an
-  // id-based reader does per file.
+  /** The gateway's read of the current snapshot: [[load]], whose scan
+    * already maps every file onto the current schema. */
+  def loadRenamed(ns: String, table: String): DataFrame = load(ns, table)
 
-  /** All recorded renames, oldest first: (oldName, newName, renameVersion). */
-  def renames(ns: String, table: String): Seq[(String, String, Int)] =
-    Sidecar.renames(sidecar(ns, table, Sidecar.Renames))
-      .map(r => (r.oldName, r.newName, r.v))
-
-  /** RENAME COLUMN — metadata-only (one sidecar line); zero files move.
-    * Subsequent appends write the NEW name; [[loadRenamed]] reconciles the
-    * generations. Chained renames compose in recording order. A CHECK
-    * constraint over the column is rewritten to name the new column. */
-  def renameColumn(ns: String, table: String, oldName: String,
-                   newName: String): Unit = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    checkConstraints(ns, table).foreach { case (name, pred) =>
-      val parsed = spark.sessionState.sqlParser.parseExpression(pred)
-      val renamed = parsed.transform {
-        case a: UnresolvedAttribute if a.nameParts.size == 1 &&
-            a.nameParts.head.equalsIgnoreCase(oldName) => UnresolvedAttribute.quoted(newName)
-      }
-      if (renamed != parsed) setProperty(ns, table, s"check.$name", renamed.sql)
-    }
-    Sidecar.append(sidecar(ns, table, Sidecar.Renames), Seq(Sidecar.renameLine(
-      Sidecar.Rename(oldName, newName, currentVersion(ns, table)))))
-  }
-
-  /** Rename-aware read of the current snapshot: files added at or before
-    * each rename's version are read under their physical (old) name and
-    * projected to the logical name; later files read natively. Both
-    * generations stay separate parquet scans (pushdown intact) unioned by
-    * name — the flat-warehouse rendition of Iceberg's per-file field-id
-    * resolution. Tables with no recorded rename take the plain
-    * [[load]] path untouched. */
-  def loadRenamed(ns: String, table: String): DataFrame = {
-    val rs = renames(ns, table)
-    if (rs.isEmpty) load(ns, table)
-    else {
-      val v = currentVersion(ns, table)
-      val cur = currentFiles(ns, table).getOrElse(Seq.empty)
-      // first version whose committed list contains the file = its add version
-      val addedAt: Map[String, Int] = {
-        val snaps = snapshots(ns, table)
-        cur.map(f => f -> snaps.collectFirst {
-          case (sv, fs) if fs.contains(f) => sv
-        }.getOrElse(0)).toMap
-      }
-      // one generation per distinct rename boundary: files with addV <= rv
-      // still carry the pre-rename physical name for that rename
-      val gens = cur.groupBy(f => rs.count { case (_, _, rv) => addedAt(f) <= rv })
-      gens.map { case (nPending, files) =>
-        val df = readFilesDv(ns, table, files, v)
-        // the LAST nPending renames (newest-recorded) are still physical
-        // in this generation — apply them oldest-first
-        rs.takeRight(nPending).foldLeft(df) { case (d, (o, n, _)) =>
-          d.withColumnRenamed(o, n)
-        }
-      }.reduce(_ unionByName _)
-    }
-  }
-
+  /** Zero-copy table clone (Delta SHALLOW CLONE / Iceberg snapshot-ref
+    * analog): a new table whose first snapshot REFERENCES the source's
+    * current data files (`../<src>/<file>` relative paths) — no data moves,
+    * clone cost is one metadata write regardless of table size. The clone
+    * then evolves independently: appends land in its own directory, and
+    * every COW mutation rewrites only touched files INTO the clone (source
+    * files are immutable by construction, so the source can never observe
+    * the clone's changes). Manifest metadata travels with the clone — the
+    * stats/bounds sidecar lines are rekeyed onto the `../` references so
+    * countStar and zone-map pruning stay metadata-only — and merge-on-read
+    * deletion vectors are inherited at clone version 0 (file keys stay
+    * basenames, which is what the DV anti-join matches on).
+    *
+    * Contract (same as Delta's shallow clone): the clone does NOT pin its
+    * source files against the SOURCE's own expiry/vacuum — expiring source
+    * history that the clone still references breaks the clone. Pass
+    * `deep = true` for the remedy when clones must outlive source
+    * retention: the referenced files are physically COPIED into the clone
+    * (cost ∝ data, paid once at clone time — Delta's deep clone), after
+    * which the two tables share nothing. */
   def cloneTable(ns: String, src: String, dst: String,
                  deep: Boolean = false): Unit = {
     val srcFiles = currentFiles(ns, src).getOrElse(
       throw new IllegalArgumentException(s"no snapshot log for $ns.$src"))
     Files.createDirectories(Paths.get(tablePath(ns, dst)))
-    Sidecar.metaObject(sidecar(ns, src, Sidecar.Meta)).foreach(m =>
-      Sidecar.replace(sidecar(ns, dst, Sidecar.Meta), Iterator(m)))
+    // the schema history travels; the clone's own log starts at v0 under
+    // the source's current schema
+    Sidecar.metaObject(sidecar(ns, src, Sidecar.Meta)).foreach { m =>
+      val h = Sidecar.meta(m)
+      Sidecar.replace(sidecar(ns, dst, Sidecar.Meta), Iterator(
+        Sidecar.withSchemas(m, h.schemas.map(_.copy(since = 0)), h.currentSchema)))
+    }
     if (deep) srcFiles.foreach { f =>
       Files.copy(Paths.get(tablePath(ns, src)).resolve(f),
         Paths.get(tablePath(ns, dst)).resolve(f),
@@ -2597,13 +2566,9 @@ class LakeCatalog(spark: SparkSession, root: String) {
   /** Single typed-row INSERT (the reference's whole INSERT surface,
     * IcebergConnection.py:133-187) — a degenerate one-row append. */
   def insertRow(ns: String, table: String, values: Seq[Any]): Unit = {
-    // LOGICAL schema (rename-aware): after ALTER TABLE … RENAME COLUMN the
-    // new row must land under the NEW physical name — writing the old name
-    // would put a pre-rename column into a post-rename-generation file,
-    // which the per-generation reconciliation cannot repair
-    val schema = loadRenamed(ns, table).schema
+    // the current schema: the row lands under the current column names
     append(ns, table, spark.createDataFrame(
-      java.util.List.of(Row.fromSeq(values)), schema))
+      java.util.List.of(Row.fromSeq(values)), tableSchema(ns, table)))
   }
 
   // ------------------------------------------------ hidden partitioning (r7)
@@ -2896,16 +2861,31 @@ class LakeCatalog(spark: SparkSession, root: String) {
   // layouts the touched set is a sliver of the table, and the "find" pass
   // is a pushdown-filtered scan that only reads the predicate's columns.
 
-  /** Names of current data files containing rows matching `cond`. */
-  private def touchedFiles(cur: Seq[String], df: DataFrame, cond: Column): Seq[String] = {
-    val touched = df.where(cond)
-      .select(input_file_name().as("f")).distinct().collect()
-      .map(r => Paths.get(new java.net.URI(r.getString(0)).getPath).getFileName.toString)
-      .toSet
+  /** The files of `cur` holding a row that `matching` keeps of their scan. */
+  private def touchedFiles(ns: String, table: String, cur: Seq[String])
+                          (matching: DataFrame => DataFrame): Seq[String] = {
+    if (cur.isEmpty) return Seq.empty
+    val touched = matching(scan(ns, table, cur, pos = true))
+      .select(col("__dv_file")).distinct().collect().map(_.getString(0)).toSet
     // compare by BASENAME on both sides: cloned tables commit `../src/f`
     // references whose physical scan paths still end in the unique part-file
     // name (names carry write UUIDs, so cross-table collisions can't happen)
     cur.filter(f => touched(Paths.get(f).getFileName.toString))
+  }
+
+  /** One row per `key`: the winner among duplicates is the max over the
+    * other columns' ordering, so MERGE and CDC apply are deterministic on a
+    * batch that repeats a key (last-writer-wins needs an explicit sequence
+    * column from the caller). */
+  private def onePerKey(df: DataFrame, key: String): DataFrame = {
+    val others = df.columns.filterNot(_ == key)
+    if (others.isEmpty) df.distinct()
+    else {
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
+        .orderBy(others.map(c => col(c).desc_nulls_last): _*)
+      df.withColumn("_graft_rn", org.apache.spark.sql.functions.row_number().over(w))
+        .where(col("_graft_rn") === 1).drop("_graft_rn")
+    }
   }
 
   /** The main ref's current snapshot version — what an optimistic writer
@@ -2936,11 +2916,9 @@ class LakeCatalog(spark: SparkSession, root: String) {
       case Some(v) => snapshots(ns, table).find(_._1 == v)
         .getOrElse(throw new IllegalArgumentException(
           s"no snapshot $v for $ns.$table"))._2
-      case None =>
-        currentFiles(ns, table).getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+      case None => liveFiles(ns, table)
     }
-    val df = readFiles(ns, table, cur)
-    val touched = touchedFiles(cur, df, cond)
+    val touched = touchedFiles(ns, table, cur)(_.where(cond))
     if (touched.nonEmpty) {
       // SQL DELETE removes only rows where cond is TRUE; under three-valued
       // logic `!cond` is NULL (not true) for NULL-valued predicates, so a
@@ -2962,9 +2940,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
   /** UPDATE SET col = expr WHERE cond — file-granular copy-on-write. */
   def updateWhere(ns: String, table: String, cond: Column,
                   set: Map[String, Column]): Unit = {
-    val cur = currentFiles(ns, table).getOrElse(listParquet(Paths.get(tablePath(ns, table))))
-    val df = readFiles(ns, table, cur)
-    val touched = touchedFiles(cur, df, cond)
+    val cur = liveFiles(ns, table)
+    val touched = touchedFiles(ns, table, cur)(_.where(cond))
     if (touched.nonEmpty) {
       // DV-aware (see deleteWhere): never resurrect MOR-deleted rows
       val updated = set.foldLeft(
@@ -2985,32 +2962,10 @@ class LakeCatalog(spark: SparkSession, root: String) {
   def merge(ns: String, table: String, rawSource: DataFrame, key: String): Unit = {
     // A source batch with a repeated key would otherwise survive both the
     // left_semi (updates) split twice and insert duplicate rows for that key.
-    // Collapse to ONE deterministic winner per key first: max over the
-    // remaining columns' ordering (last-writer-wins is the caller's job —
-    // upsert batches are expected key-unique; this makes the violation safe
-    // and deterministic instead of silently corrupting).
-    val source = {
-      val others = rawSource.columns.filterNot(_ == key)
-      if (others.isEmpty) rawSource.distinct()
-      else {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col(key)).orderBy(others.map(c => col(c).desc_nulls_last): _*)
-        rawSource.withColumn("_graft_rn", org.apache.spark.sql.functions.row_number().over(w))
-          .where(col("_graft_rn") === 1).drop("_graft_rn")
-      }
-    }
-    val cur = currentFiles(ns, table).getOrElse(listParquet(Paths.get(tablePath(ns, table))))
-    val target = readFiles(ns, table, cur)
+    val source = onePerKey(rawSource, key)
+    val cur = liveFiles(ns, table)
     val srcKeys = broadcast(source.select(col(key)).distinct())
-    val touched = {
-      // capture the file name BEFORE the join — input_file_name() is
-      // undefined once rows can come from more than one source
-      val t = target.withColumn("_graft_file", input_file_name())
-        .join(srcKeys, Seq(key), "left_semi")
-        .select(col("_graft_file")).distinct().collect()
-        .map(r => Paths.get(new java.net.URI(r.getString(0)).getPath).getFileName.toString)
-      cur.filter(t.toSet)
-    }
+    val touched = touchedFiles(ns, table, cur)(_.join(srcKeys, Seq(key), "left_semi"))
     // Rewritten touched files: unmatched rows survive, matched keys take
     // the source row wholesale; inserts = source keys absent from the
     // target. Matched keys are derived from the TOUCHED FILES' rows, never
@@ -3055,30 +3010,12 @@ class LakeCatalog(spark: SparkSession, root: String) {
     if (batch.exists(b => lastCommittedBatch(ns, table).exists(_ >= b))) return
     val known = changes.where(col(opCol).isin("u", "d"))
     val deleteKeys = known.where(col(opCol) === "d").select(col(key)).distinct()
-    val upserts = {
-      // delete wins over upsert for the same key; duplicates collapse
-      val u = known.where(col(opCol) === "u").drop(opCol)
-        .join(broadcast(deleteKeys), Seq(key), "left_anti")
-      val others = u.columns.filterNot(_ == key)
-      if (others.isEmpty) u.distinct()
-      else {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col(key))
-          .orderBy(others.map(c => col(c).desc_nulls_last): _*)
-        u.withColumn("_graft_rn", org.apache.spark.sql.functions.row_number().over(w))
-          .where(col("_graft_rn") === 1).drop("_graft_rn")
-      }
-    }
-    val cur = currentFiles(ns, table).getOrElse(listParquet(Paths.get(tablePath(ns, table))))
-    val target = readFiles(ns, table, cur)
+    // delete wins over upsert for the same key; duplicates collapse
+    val upserts = onePerKey(known.where(col(opCol) === "u").drop(opCol)
+      .join(broadcast(deleteKeys), Seq(key), "left_anti"), key)
+    val cur = liveFiles(ns, table)
     val allKeys = broadcast(known.select(col(key)).distinct())
-    val touched = {
-      val t = target.withColumn("_graft_file", input_file_name())
-        .join(allKeys, Seq(key), "left_semi")
-        .select(col("_graft_file")).distinct().collect()
-        .map(r => Paths.get(new java.net.URI(r.getString(0)).getPath).getFileName.toString)
-      cur.filter(t.toSet)
-    }
+    val touched = touchedFiles(ns, table, cur)(_.join(allKeys, Seq(key), "left_semi"))
     // survivors: touched-file rows whose key is not in the change batch;
     // then every upsert row (updates + inserts alike) lands fresh
     // DV-aware (see deleteWhere): never resurrect MOR-deleted rows
@@ -3094,7 +3031,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * snapshots — time travel across a compaction keeps working; a separate
     * expire/vacuum pass would reclaim them once history is aged out. */
   def compact(ns: String, table: String, target: Int): Unit = {
-    val cur = currentFiles(ns, table).getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+    val cur = liveFiles(ns, table)
     // DV-aware read: compaction MATERIALIZES merge-on-read deletes (the
     // rewritten files simply lack the marked rows; the old DV lines go
     // inert for current reads but keep historical snapshots exact)
@@ -3152,8 +3089,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
         } else (pdir, files, files, rows, "noop")
       }
     } else {
-      val cur = currentFiles(ns, table)
-        .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
+      val cur = liveFiles(ns, table)
       val rows = countStar(ns, table).getOrElse(-1L)
       if (cur.length > maxFiles) {
         compact(ns, table, maxFiles)
@@ -3163,34 +3099,62 @@ class LakeCatalog(spark: SparkSession, root: String) {
     }
   }
 
-  /** Schema evolution: ADD COLUMN with a default (SQL expression text) for
-    * pre-existing rows. Metadata-only commit — no data file is rewritten;
-    * the evolution sidecar records (name, type, default) and reads
-    * reconcile old files (column absent → default) with new files, exactly
-    * Iceberg's add-column semantics. Durable: any later catalog instance
-    * reads the sidecar back. */
-  def addColumn(ns: String, table: String, field: StructField,
-                defaultSql: String): Unit = {
-    Sidecar.replace(sidecar(ns, table, Sidecar.Evolution), Iterator(
-      Sidecar.evolutionLine(field.name, field.dataType.sql.toLowerCase, defaultSql)))
+  // ---------------------------------------------------- schema evolution
+  // Iceberg's rule: columns are tracked by field id in a history of schemas
+  // kept in `meta`. RENAME COLUMN and ADD COLUMN each append a schema —
+  // one atomic meta replace, no data file rewritten — and [[scan]] maps
+  // files written under older schemas onto the one a read asks for.
+
+  /** Make `fields` (the current fields, changed) the current schema, from
+    * the next snapshot on, with `props` (the properties, changed) in the
+    * same meta write. */
+  private def evolveSchema(ns: String, table: String,
+                           fields: Seq[Sidecar.Field] => Seq[Sidecar.Field],
+                           props: Map[String, String] => Map[String, String] = identity)
+      : Unit = {
+    val p = sidecar(ns, table, Sidecar.Meta)
+    val raw = Sidecar.metaObject(p)
+    val m = raw.map(Sidecar.meta).filter(_.schema.isDefined).getOrElse(
+      throw new IllegalArgumentException(s"$ns.$table has no schema history"))
+    val next = Sidecar.Schema(m.schemas.map(_.id).max + 1,
+      nextVersion(ns, table), fields(m.schema.get.fields))
+    Sidecar.replace(p, Iterator(Sidecar.withProperties(
+      Sidecar.withSchemas(raw.get, m.schemas :+ next, next.id), props(m.properties))))
   }
 
-  /** The table under its evolved schema: old files' missing columns read as
-    * the declared default. mergeSchema unions file schemas; coalesce fills. */
-  def loadEvolved(ns: String, table: String): DataFrame = {
-    val cur = currentFiles(ns, table)
-      .getOrElse(listParquet(Paths.get(tablePath(ns, table))))
-    val dir = tablePath(ns, table)
-    val df = spark.read.option("mergeSchema", "true")
-      .parquet(cur.map(f => s"$dir/$f"): _*)
-    Sidecar.evolution(sidecar(ns, table, Sidecar.Evolution)) match {
-      case Some((name, defaultSql)) if df.columns.contains(name) =>
-        df.withColumn(name, coalesce(col(name), org.apache.spark.sql.functions.expr(defaultSql)))
-      case Some((name, defaultSql)) =>
-        df.withColumn(name, org.apache.spark.sql.functions.expr(defaultSql))
-      case None => df
-    }
+  /** RENAME COLUMN — metadata-only. A CHECK constraint over the column is
+    * rewritten to name the new column in the same meta write. */
+  def renameColumn(ns: String, table: String, oldName: String,
+                   newName: String): Unit = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    evolveSchema(ns, table, { fields =>
+      require(fields.exists(_.name.equalsIgnoreCase(oldName)),
+        s"no column $oldName in $ns.$table")
+      require(!fields.exists(f => f.name.equalsIgnoreCase(newName) &&
+        !f.name.equalsIgnoreCase(oldName)), s"column $newName already exists in $ns.$table")
+      fields.map(f => if (f.name.equalsIgnoreCase(oldName)) f.copy(name = newName) else f)
+    }, _.map {
+      case (k, pred) if k.startsWith("check.") =>
+        val parsed = spark.sessionState.sqlParser.parseExpression(pred)
+        val renamed = parsed.transform {
+          case a: UnresolvedAttribute if a.nameParts.size == 1 &&
+              a.nameParts.head.equalsIgnoreCase(oldName) => UnresolvedAttribute.quoted(newName)
+        }
+        k -> (if (renamed != parsed) renamed.sql else pred)
+      case kv => kv
+    })
   }
+
+  /** ADD COLUMN — metadata-only; rows of files written before it read as
+    * `defaultSql` (a SQL expression), later rows carry their own values. */
+  def addColumn(ns: String, table: String, field: StructField,
+                defaultSql: String): Unit =
+    evolveSchema(ns, table, { fields =>
+      require(!fields.exists(_.name.equalsIgnoreCase(field.name)),
+        s"column ${field.name} already exists in $ns.$table")
+      fields :+ Sidecar.Field(fields.map(_.id).maxOption.getOrElse(0) + 1, field.name,
+        field.dataType, Some(defaultSql))
+    })
 }
 
 object LakeCatalog {

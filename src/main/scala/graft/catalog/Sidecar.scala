@@ -2,7 +2,7 @@ package graft.catalog
 
 import java.nio.file.{Files, NoSuchFileException, Path, StandardCopyOption, StandardOpenOption}
 
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.json4s._
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
@@ -20,13 +20,14 @@ import scala.jdk.CollectionConverters._
   *  - One parser and one line builder per kind, next to each other below.
   *
   * Format: one compact JSON object per line (the whole-file kinds — refs,
-  * meta, hidden_spec, evolution — are one-line files). Lines are built as
+  * meta, hidden_spec — are one-line files). Lines are built as
   * JValues and rendered by Jackson, so any string value (quotes,
   * backslashes, control characters, non-BMP code points) round-trips; a
   * string that UTF-8 cannot encode (a lone surrogate) is refused before the
   * file is touched. Parsers accept the legacy shapes older writers left:
   * log lines without `parent`, DV lines without `token`, equality-delete
-  * lines without `scope`, and bloom lines with a `bits` list.
+  * lines without `scope`, file-stats lines without `bytes` or `schema`,
+  * and bloom lines with a `bits` list.
   */
 private[graft] object Sidecar {
 
@@ -41,16 +42,14 @@ private[graft] object Sidecar {
   case object FileStats extends Kind("filestats")
   case object Blooms extends Kind("blooms")
   case object Ndv extends Kind("ndv")
-  case object Renames extends Kind("renames")
   case object Meta extends Kind("meta")
   case object HiddenSpec extends Kind("hidden_spec")
-  case object Evolution extends Kind("evolution")
   /** Streaming fence file of older layouts; only ever deleted now (the
     * fence rides the snapshot log's `batch` field). */
   case object StreamState extends Kind("stream_state")
 
   val kinds: Seq[Kind] = Seq(Snapshots, Refs, ColStats, Hist, Dv, EqDel,
-    FileStats, Blooms, Ndv, Renames, Meta, HiddenSpec, Evolution, StreamState)
+    FileStats, Blooms, Ndv, Meta, HiddenSpec, StreamState)
 
   /** The `kind` sidecar of `table`, which lives in namespace dir `nsDir`. */
   def path(nsDir: Path, table: String, kind: Kind): Path =
@@ -260,12 +259,15 @@ private[graft] object Sidecar {
 
   // ------------------------------------------------- manifest file stats
   // `filestats`: one line per data file ever written,
-  // {"file","rows","bounds":{"<col>":[lo,hi],...}}; later lines win.
+  // {"file","rows","bytes","schema","bounds":{"<col>":[lo,hi],...}}; later
+  // lines win. `bytes` is the file's size at commit, `schema` the id of the
+  // table schema it was written under; lines of older writers lack both.
 
   /** `bounds` keeps only finite bounds, whatever JSON number type wrote
     * them: a non-finite or malformed bound leaves the column unbounded
     * (must-scan), never prunable. `raw` is the line as read. */
-  final case class FileStat(file: String, rows: Option[Long],
+  final case class FileStat(file: String, rows: Option[Long], bytes: Option[Long],
+                            schema: Option[Int],
                             bounds: Map[String, (Double, Double)], raw: JValue)
 
   def fileStats(p: Path): Seq[FileStat] = lines(p).flatMap { j =>
@@ -278,13 +280,13 @@ private[graft] object Sidecar {
         }.toMap
         case _ => Map.empty[String, (Double, Double)]
       }
-      FileStat(f, long(j \ "rows"), bounds, j)
+      FileStat(f, long(j \ "rows"), long(j \ "bytes"), int(j \ "schema"), bounds, j)
     }
   }
 
-  def fileStatLine(file: String, rows: Long,
+  def fileStatLine(file: String, rows: Long, bytes: Long, schema: Option[Int],
                    bounds: Seq[(String, (Double, Double))]): JValue =
-    ("file" -> file) ~ ("rows" -> rows) ~
+    ("file" -> file) ~ ("rows" -> rows) ~ ("bytes" -> bytes) ~ ("schema" -> schema) ~
       ("bounds" -> JObject(bounds.toList.map { case (c, (lo, hi)) =>
         c -> (JArray(List(JDouble(lo), JDouble(hi))): JValue) }))
 
@@ -345,25 +347,34 @@ private[graft] object Sidecar {
   def ndvLine(s: NdvSketch): JValue =
     ("file" -> s.file) ~ ("col" -> s.col) ~ ("k" -> s.k) ~ ("mins" -> s.mins)
 
-  // ------------------------------------------------------------- renames
-  // `renames`: one line per column rename, {"old","new","v"}.
+  // ---------------------------------------------------------------- meta
+  // `meta`: one object, {"table","schemas":[{"id","since","fields":[{"id",
+  // "name","type","default"}]}],"current_schema","partition_spec":[...],
+  // "sort_order":[...],"properties":{...}}. The schema history keeps every
+  // schema the table has had, each field keyed by an id that survives
+  // renames; `type` is Spark's JSON form of the data type and `default`
+  // (SQL text) is set only on an added field.
 
-  final case class Rename(oldName: String, newName: String, v: Int)
+  /** One column, identified across renames by `id`. A file written before
+    * the column existed reads it as `default` (NULL when absent). */
+  final case class Field(id: Int, name: String, dataType: DataType,
+                         default: Option[String])
 
-  def renames(p: Path): Seq[Rename] = lines(p).map { j =>
-    Rename(required(str(j \ "old"), "old", j), required(str(j \ "new"), "new", j),
-      required(int(j \ "v"), "v", j))
+  /** One schema of the history; snapshots from version `since` on were
+    * committed under it. Every column is nullable, as Spark reads parquet
+    * and as its own file-source tables declare: nothing enforces NOT NULL. */
+  final case class Schema(id: Int, since: Int, fields: Seq[Field]) {
+    def struct: StructType = StructType(fields.map(f => StructField(f.name, f.dataType)))
   }
 
-  def renameLine(r: Rename): JValue =
-    ("old" -> r.oldName) ~ ("new" -> r.newName) ~ ("v" -> r.v)
-
-  // ---------------------------------------------------------------- meta
-  // `meta`: one object, {"table","schema":[{"name","type","nullable"}],
-  // "partition_spec":[...],"sort_order":[...],"properties":{...}}.
-
   final case class TableMeta(partitionSpec: Seq[String], sortOrder: Seq[String],
-                             properties: Map[String, String])
+                             properties: Map[String, String],
+                             schemas: Seq[Schema], currentSchema: Int) {
+    /** The current schema; None for a meta without a schema history. */
+    def schema: Option[Schema] = schemas.find(_.id == currentSchema)
+    /** The schema snapshot `v` was committed under. */
+    def schemaAt(v: Int): Option[Schema] = schemas.filter(_.since <= v).lastOption
+  }
 
   /** The meta object as read (None when the table has no meta sidecar). */
   def metaObject(p: Path): Option[JValue] = lines(p).headOption
@@ -373,16 +384,42 @@ private[graft] object Sidecar {
     j \ "properties" match {
       case JObject(fs) => fs.flatMap { case (k, v) => str(v).map(k -> _) }.toMap
       case _ => Map.empty
-    })
+    },
+    j \ "schemas" match {
+      case JArray(ss) => ss.map { s =>
+        Schema(required(int(s \ "id"), "id", s), int(s \ "since").getOrElse(0),
+          (s \ "fields").children.map { f =>
+            Field(required(int(f \ "id"), "id", f), required(str(f \ "name"), "name", f),
+              DataType.fromJson(render(f \ "type")), str(f \ "default"))
+          })
+      }
+      case _ => Nil
+    },
+    int(j \ "current_schema").getOrElse(0))
 
+  /** A new table's meta: its history is `schema` as schema 0, field ids
+    * from 1. */
   def metaLine(table: String, schema: StructType, partitionSpec: Seq[String],
-               sortOrder: Seq[String], properties: Map[String, String]): JValue =
-    ("table" -> table) ~
-      ("schema" -> schema.fields.toList.map(f =>
-        ("name" -> f.name) ~ ("type" -> f.dataType.sql.toLowerCase) ~
-          ("nullable" -> f.nullable))) ~
+               sortOrder: Seq[String], properties: Map[String, String]): JValue = {
+    val first = Schema(0, 0, schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      Field(i + 1, f.name, f.dataType, None) })
+    ("table" -> table) ~ history(Seq(first), 0) ~
       ("partition_spec" -> partitionSpec) ~ ("sort_order" -> sortOrder) ~
       ("properties" -> propsObj(properties))
+  }
+
+  /** `j` with its schema history replaced in place. */
+  def withSchemas(j: JValue, schemas: Seq[Schema], current: Int): JValue =
+    history(schemas, current).obj.foldLeft(j) { case (m, (k, v)) => setField(m, k, v) }
+
+  private def history(schemas: Seq[Schema], current: Int): JObject =
+    ("schemas" -> schemas.toList.map { s =>
+      ("id" -> s.id) ~ ("since" -> s.since) ~ ("fields" -> s.fields.toList.map { f =>
+        val field = ("id" -> f.id) ~ ("name" -> f.name) ~
+          ("type" -> JsonMethods.parse(f.dataType.json))
+        f.default.fold(field)(d => field ~ ("default" -> d))
+      })
+    }) ~ ("current_schema" -> current)
 
   /** `j` with its properties replaced by `props` (moved to the end). */
   def withProperties(j: JValue, props: Map[String, String]): JValue = j match {
@@ -408,18 +445,6 @@ private[graft] object Sidecar {
 
   def hiddenSpecLine(transform: String, source: String, n: Int): JValue =
     ("transform" -> transform) ~ ("source" -> source) ~ ("n" -> n)
-
-  // ----------------------------------------------------- schema evolution
-  // `evolution`: one object, {"add_column":{"name","type","default"}}.
-
-  /** (column name, default SQL) of the recorded ADD COLUMN. */
-  def evolution(p: Path): Option[(String, String)] = lines(p).headOption.flatMap { j =>
-    val a = j \ "add_column"
-    for (n <- str(a \ "name"); d <- str(a \ "default")) yield (n, d)
-  }
-
-  def evolutionLine(name: String, sqlType: String, defaultSql: String): JValue =
-    "add_column" -> (("name" -> name) ~ ("type" -> sqlType) ~ ("default" -> defaultSql))
 
   private def setField(j: JValue, field: String, value: JValue): JValue = j match {
     case JObject(fs) => JObject(fs.map {

@@ -609,9 +609,8 @@ class SqlGateway(spark: SparkSession, catalog: LakeCatalog) {
         Seq(s"Rolled back $nsName.$table to version $v").toDF("status")
 
       case insertTb(Lake(nsName, table), colSpec, values) =>
-        // logical (rename-aware) schema: INSERT accepts the renamed column
-        // names and the row lands under the new physical name
-        val schema = catalog.loadRenamed(nsName, table).schema
+        // the current schema, from the table's schema history
+        val schema = catalog.tableSchema(nsName, table)
         val parsed = parseValues(values)
         val typed: Seq[Any] = Option(colSpec) match {
           case None =>

@@ -199,7 +199,7 @@ object CatalogOps2 {
       StructField("tag", StringType), "'legacy'")
     cat.append("scratch", "evo",
       Seq((3L, 300L, "fresh"), (4L, 400L, "fresh")).toDF("id", "val", "tag"))
-    cat.loadEvolved("scratch", "evo")
+    cat.load("scratch", "evo")
       .select(col("id"), col("val"), col("tag"))
       .orderBy("id")
   }

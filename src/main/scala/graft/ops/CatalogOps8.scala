@@ -96,16 +96,15 @@ object CatalogOps8 {
 
   /** Metadata-only column rename ([[LakeCatalog.renameColumn]], the Iceberg
     * field-id rename contract): generation 1 lands as `qty`, the column is
-    * renamed to `quantity` with ONE sidecar line — the op proves zero data
-    * movement structurally (the committed file list and the snapshot count
-    * are both unchanged across the rename) — then generation 2 appends
-    * under the NEW name natively. [[LakeCatalog.loadRenamed]] reconciles:
-    * pre-rename files are read with their physical schema and projected to
-    * the logical name (per-generation scans, pushdown intact — the flat-
-    * warehouse rendition of per-file field-id resolution), post-rename
-    * files read natively, unioned by name. The cross-generation count and
-    * decimal sum hash-gate the reconciliation; the schema booleans pin
-    * that the logical schema shows only the new name. */
+    * renamed to `quantity` with ONE schema-history edit — the op proves
+    * zero data movement structurally (the committed file list and the
+    * snapshot count are both unchanged across the rename) — then
+    * generation 2 appends under the NEW name natively. The read maps
+    * pre-rename files onto the current schema by field id (one scan per
+    * file schema, pushdown intact) and reads post-rename files natively,
+    * unioned by name. The cross-generation count and decimal sum hash-gate
+    * the mapping; the schema booleans pin that the current schema shows
+    * only the new name. */
   def cRenameColumn(spark: SparkSession, dir: String): DataFrame = {
     val cat = new LakeCatalog(spark, scratch)
     val li = Tables.table(spark, dir, "lineitem")

@@ -125,7 +125,7 @@ class Catalog2Spec extends SparkSpec {
     cat.addColumn("ns", "e", StructField("tag", StringType), "'legacy'")
     cat.append("ns", "e", Seq((2L, "fresh")).toDF("id", "tag"))
     // a NEW catalog instance must see the evolution (sidecar, not state)
-    val got = new LakeCatalog(spark, catRoot(cat)).loadEvolved("ns", "e")
+    val got = new LakeCatalog(spark, catRoot(cat)).load("ns", "e")
       .as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(got == Seq((1L, "legacy"), (2L, "fresh")))
   }
@@ -221,6 +221,20 @@ class Catalog2Spec extends SparkSpec {
     cat.merge("ns", "dup", src, "k")
     val got = cat.load("ns", "dup").as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(got == Seq((1L, "z_upd"), (9L, "z_ins")), s"got $got")
+  }
+
+  test("merge on a shallow clone replaces the cloned row instead of duplicating its key") {
+    import spark.implicits._
+    val (cat, _) = freshCat
+    cat.createTable("ns", "src", StructType(Seq(
+      StructField("k", LongType), StructField("v", StringType))))
+    cat.append("ns", "src", Seq((1L, "old1"), (2L, "old2")).toDF("k", "v").coalesce(1))
+    cat.cloneTable("ns", "src", "cl")
+    cat.merge("ns", "cl", Seq((1L, "new1")).toDF("k", "v"), "k")
+    val got = cat.load("ns", "cl").as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((1L, "new1"), (2L, "old2")), s"got $got")
+    assert(cat.load("ns", "src").as[(Long, String)].collect().sortBy(_._1).toSeq ==
+      Seq((1L, "old1"), (2L, "old2")), "the merge reached the source table")
   }
 
   test("streaming batch ids embedded in snapshot lines survive expire") {

@@ -163,7 +163,8 @@ class SidecarSpec extends SparkSpec {
       Sidecar.replace(p, Iterator(meta, Sidecar.refsLine(refs)))
       val back = Sidecar.lines(p)
       back == Seq(meta, Sidecar.refsLine(refs)) &&
-        Sidecar.meta(back.head) == Sidecar.TableMeta(xs, xs.reverse, props) && {
+        Sidecar.meta(back.head) == Sidecar.TableMeta(xs, xs.reverse, props,
+          Seq(Sidecar.Schema(0, 0, Seq(Sidecar.Field(1, s, StringType, None)))), 0) && {
           Sidecar.replace(p, Iterator(Sidecar.refsLine(refs)))
           Sidecar.refs(p) == refs
         }
@@ -187,8 +188,9 @@ class SidecarSpec extends SparkSpec {
       """{"v":3,"parent":2,"batch":7,"token":"tk","files":["a.parquet","b.parquet"]}""")
     assert(r(Sidecar.logLine(0, -1, None, None, Seq.empty)) == """{"v":0,"parent":-1,"files":[]}""")
     assert(r(Sidecar.refsLine(Map("main" -> 4, "b" -> 2))) == """{"b":2,"main":4}""")
-    assert(r(Sidecar.fileStatLine("f", 10L, Seq("k" -> (1.0, 2.5), "q" -> (-3.0E10, 1.5E-4)))) ==
-      """{"file":"f","rows":10,"bounds":{"k":[1.0,2.5],"q":[-3.0E10,1.5E-4]}}""")
+    assert(r(Sidecar.fileStatLine("f", 10L, 640L, Some(1),
+      Seq("k" -> (1.0, 2.5), "q" -> (-3.0E10, 1.5E-4)))) ==
+      """{"file":"f","rows":10,"bytes":640,"schema":1,"bounds":{"k":[1.0,2.5],"q":[-3.0E10,1.5E-4]}}""")
     assert(r(Sidecar.histLine(Sidecar.HistBucket("q", 1, 0.0, 100.0, 7L))) ==
       """{"column":"q","bucket":1,"lo":0.0,"hi":100.0,"rows":7}""")
     assert(r(Sidecar.colStatLine(Sidecar.ColStat("k", 5, 1, 4, "1", "9"))) ==
@@ -205,16 +207,14 @@ class SidecarSpec extends SparkSpec {
       """{"v":0,"col":"k","ref":"ns/t_deletes/eq-1","files":{},"scope":1,"applies":["f"]}""")
     assert(r(Sidecar.metaLine("ns.t", StructType(Seq(StructField("id", LongType, nullable = false))),
       Seq("id"), Seq("id asc"), Map("b" -> "2", "a" -> "1"))) ==
-      """{"table":"ns.t","schema":[{"name":"id","type":"bigint","nullable":false}],""" +
+      """{"table":"ns.t","schemas":[{"id":0,"since":0,"fields":""" +
+        """[{"id":1,"name":"id","type":"long"}]}],"current_schema":0,""" +
         """"partition_spec":["id"],"sort_order":["id asc"],"properties":{"a":"1","b":"2"}}""")
     assert(r(Sidecar.bloomLine("f", "k", "i", 64, 4, "AAAA")) ==
       """{"file":"f","column":"k","vtype":"i","m":64,"k":4,"packed":"AAAA"}""")
     assert(r(Sidecar.ndvLine(Sidecar.NdvSketch("f", "k", 2, Seq(5L, 9L)))) ==
       """{"file":"f","col":"k","k":2,"mins":[5,9]}""")
-    assert(r(Sidecar.renameLine(Sidecar.Rename("a", "b", 3))) == """{"old":"a","new":"b","v":3}""")
     assert(r(Sidecar.hiddenSpecLine("bucket", "k", 8)) == """{"transform":"bucket","source":"k","n":8}""")
-    assert(r(Sidecar.evolutionLine("z", "bigint", "0")) ==
-      """{"add_column":{"name":"z","type":"bigint","default":"0"}}""")
   }
 
   test("parsers accept the legacy line shapes") {
