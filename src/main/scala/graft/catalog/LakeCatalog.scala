@@ -127,12 +127,18 @@ class LakeCatalog(spark: SparkSession, root: String) {
     }
   }
 
+  /** Commits the next snapshot on `ref`: its file list is `files`, or,
+    * with `appended`, main's current files followed by `files`. A commit
+    * reads the log and the refs once each. */
   private def commitSnapshot(ns: String, table: String, files: Seq[String],
                              batch: Option[Long] = None,
                              ref: String = "main",
                              expectedBase: Option[Int] = None,
-                             token: Option[String] = None): Int = {
-    val prev = snapshots(ns, table)
+                             token: Option[String] = None,
+                             appended: Boolean = false): Int = {
+    val prev = snapshotLog(ns, table)
+    val r = refs(ns, table)
+    val newest = prev.map(_.v).maxOption
     // optimistic-concurrency validation (the Iceberg commit protocol): a
     // writer that planned its commit against snapshot E must fail if the
     // table moved — committing a COW rewrite computed from a stale file
@@ -144,19 +150,17 @@ class LakeCatalog(spark: SparkSession, root: String) {
     // fixed). Failed commits leave their staged files unreferenced —
     // exactly the debris [[removeOrphans]] exists to sweep.
     expectedBase.foreach { e =>
-      val head = refs(ns, table).getOrElse("main",
-        prev.map(_._1).maxOption.getOrElse(0))
+      val head = r.getOrElse("main", newest.getOrElse(0))
       if (head != e) throw new CommitConflictException(
         s"$ns.$table moved: expected base $e, head is $head — recompute and retry")
     }
-    val v = prev.map(_._1).maxOption.map(_ + 1).getOrElse(0)
+    val v = newest.fold(0)(_ + 1)
     // parent pointer = the head of the ref this commit advances, AT commit
     // time (Iceberg snapshot parent-id): after a rollback the next commit's
     // parent is the rolled-back-to snapshot, not the numerically previous
     // one — exactly the lineage `$history.is_current_ancestor` exposes.
-    val r0 = refs(ns, table)
-    val parent: Int = r0.getOrElse(ref,
-      r0.getOrElse("main", prev.map(_._1).maxOption.getOrElse(-1)))
+    val parent: Int = r.getOrElse(ref, r.getOrElse("main", newest.getOrElse(-1)))
+    val listed = if (appended) mainFiles(prev, r).getOrElse(Seq.empty) ++ files else files
     // streaming commits carry their micro-batch id IN the snapshot line:
     // data-commit and replay-fence are then one atomic append — a crash can
     // never leave the batch committed but unfenced (the window a separate
@@ -167,27 +171,27 @@ class LakeCatalog(spark: SparkSession, root: String) {
     // a failed CAS (whose version number a LATER transaction reuses) stay
     // permanently inert instead of becoming someone else's deletes.
     Sidecar.append(sidecar(ns, table, Sidecar.Snapshots),
-      Seq(Sidecar.logLine(v, parent, batch, token, files.sorted)))
+      Seq(Sidecar.logLine(v, parent, batch, token, listed.sorted)))
     // ref bookkeeping (branches — see the "branch refs" section): a branch
     // commit adds its snapshot to the SAME immutable log but moves only its
     // own ref, pinning main where it was; a main commit advances the main
     // ref iff a refs sidecar already exists (no sidecar = main is implicitly
     // the newest snapshot, the pre-branch layout every other path reads).
-    val r = refs(ns, table)
-    if (ref != "main") {
-      val mainPinned = r.getOrElse("main", prev.map(_._1).maxOption.getOrElse(0))
-      writeRefs(ns, table, r + ("main" -> mainPinned, ref -> v))
-    } else if (r.nonEmpty) writeRefs(ns, table, r + ("main" -> v))
+    if (ref != "main")
+      writeRefs(ns, table, r + ("main" -> r.getOrElse("main", newest.getOrElse(0)), ref -> v))
+    else if (r.nonEmpty) writeRefs(ns, table, r + ("main" -> v))
     v
   }
 
-  private[catalog] def currentFiles(ns: String, table: String): Option[Seq[String]] = {
-    val snaps = snapshots(ns, table)
-    refs(ns, table).get("main") match {
-      case Some(v) => snaps.find(_._1 == v).map(_._2)
-      case None => snaps.lastOption.map(_._2)
+  /** Main's files: the main ref's snapshot, or the newest without refs. */
+  private def mainFiles(log: Seq[Sidecar.LogEntry], r: Map[String, Int]): Option[Seq[String]] =
+    r.get("main") match {
+      case Some(v) => log.find(_.v == v).map(_.files)
+      case None => log.lastOption.map(_.files)
     }
-  }
+
+  private[catalog] def currentFiles(ns: String, table: String): Option[Seq[String]] =
+    mainFiles(snapshotLog(ns, table), refs(ns, table))
 
   /** The current snapshot's files; for a table without a snapshot log, the
     * parquet files in its directory. */
@@ -483,53 +487,33 @@ class LakeCatalog(spark: SparkSession, root: String) {
       (est, "shuffle", probe.join(build.hint("merge"), key))
   }
 
-  /** Spark's own inferred schema per parquet file set, keyed on each
-    * file's (path, size, mtime): a file rewritten in place misses the memo
-    * and is inferred (and fails) afresh. LRU-bounded: one entry per
-    * distinct file set read recently. */
-  private val schemaMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[Seq[(String, Long, Long)], StructType](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Seq[(String, Long, Long)], StructType]): Boolean =
-        size() > 64
-    })
-
-  /** `spark.read.parquet(paths)` without the schema-inference job when
-    * these exact files were read before. A file that cannot be stat'ed is
-    * left to Spark's read, which reports it. */
-  private def readParquet(paths: Seq[String]): DataFrame = {
-    val key = try paths.map { p =>
-      val a = Files.readAttributes(Paths.get(p),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      (p, a.size(), a.lastModifiedTime().toMillis)
-    } catch { case _: java.io.IOException => return spark.read.parquet(paths: _*) }
-    Option(schemaMemo.get(key)) match {
-      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
-      case None =>
-        val df = spark.read.parquet(paths: _*)
-        schemaMemo.put(key, df.schema)
-        df
-    }
-  }
-
   /** The table's meta sidecar, parsed (None for a table without one). */
   private def metaOf(ns: String, table: String): Option[Sidecar.TableMeta] =
     Sidecar.metaObject(sidecar(ns, table, Sidecar.Meta)).map(Sidecar.meta)
+
+  /** The id of the table's current schema (None without a schema history). */
+  private def currentSchemaId(ns: String, table: String): Option[Int] =
+    metaOf(ns, table).flatMap(_.schema).map(_.id)
 
   /** The one scan of a table's data files. The rows take the schema of
     * snapshot `asOf`, or the current schema when None. Each file is read
     * under the schema its commit recorded in `filestats` and projected onto
     * that target by field id: a renamed column takes its new name, a column
-    * added later reads as its default. When every file has the target
-    * schema, always so for a table whose schema never changed, the plan is
-    * one plain parquet scan. `pos` adds the file basename and row position
-    * that deletion vectors key on. A table without a schema history is read
-    * as its files are. */
+    * added later reads as its default. Files that are all [[intact]] are
+    * read under that recorded schema, with no schema-inference job; others
+    * are read as they are, so a file that is no longer parquet fails the
+    * load. When every file has the target schema, always so for a table
+    * whose schema never changed, the plan is one plain parquet scan. `pos`
+    * adds the file basename and row position that deletion vectors key on.
+    * A table without a schema history is read as its files are. */
   private def scan(ns: String, table: String, files: Seq[String],
                    asOf: Option[Int] = None, pos: Boolean = false): DataFrame = {
     val dir = tablePath(ns, table)
-    def read(fs: Seq[String]): DataFrame = {
-      val df = readParquet(fs.map(f => s"$dir/$f"))
+    lazy val stats = statLines(ns, table)
+    def read(fs: Seq[String], schema: Option[Sidecar.Schema]): DataFrame = {
+      val reader = schema.filter(_ => fs.forall(intact(Paths.get(dir), stats)))
+        .fold(spark.read)(s => spark.read.schema(s.struct))
+      val df = reader.parquet(fs.map(f => s"$dir/$f"): _*)
       if (!pos) df
       else df.select(col("*"),
         substring_index(col("_metadata.file_path"), "/", -1).as("__dv_file"),
@@ -538,24 +522,21 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val meta = metaOf(ns, table)
     meta.flatMap(m => asOf.fold(m.schema)(m.schemaAt)) match {
       case None if files.isEmpty => spark.read.parquet(dir).limit(0)
-      case None => read(files)
+      case None => read(files, None)
       case Some(target) if files.isEmpty =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], target.struct)
       case Some(target) =>
         val schemas = meta.get.schemas
-        val written: Map[String, Int] =
-          if (schemas.size == 1) Map.empty
-          else Sidecar.fileStats(sidecar(ns, table, Sidecar.FileStats))
-            .flatMap(s => s.schema.map(s.file -> _)).toMap
-        val gens = files.groupBy(f => written.getOrElse(f, target.id))
+        val gens = files.groupBy(f => stats.get(f).flatMap(_.schema).getOrElse(target.id))
         val mapped = (gens - target.id).toSeq.sortBy(_._1).map { case (id, fs) =>
-          val names = schemas.find(_.id == id).toSeq.flatMap(_.fields)
-            .map(f => f.id -> f.name).toMap
-          read(fs).select(target.fields.map(f => names.get(f.id).fold(
+          val written = schemas.find(_.id == id)
+          val names = written.toSeq.flatMap(_.fields).map(f => f.id -> f.name).toMap
+          read(fs, written).select(target.fields.map(f => names.get(f.id).fold(
             f.default.fold(lit(null))(expr).cast(f.dataType))(col).as(f.name)) ++
             (if (pos) Seq(col("__dv_file"), col("__dv_pos")) else Nil): _*)
         }
-        (gens.get(target.id).map(read).toSeq ++ mapped).reduce(_ unionByName _)
+        (gens.get(target.id).map(read(_, Some(target))).toSeq ++ mapped)
+          .reduce(_ unionByName _)
     }
   }
 
@@ -646,9 +627,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
     df.withColumn("_p", col(partCol)).write.mode("append")
       .partitionBy("_p").parquet(dir.toString)
     val added = listParquetRecursive(dir).filterNot(before)
-    recordFileStats(ns, table, added)
-    commitSnapshot(ns, table,
-      currentFiles(ns, table).getOrElse(Seq.empty) ++ added)
+    recordFileStats(ns, table, added, currentSchemaId(ns, table))
+    commitSnapshot(ns, table, added, appended = true)
   }
 
   /** Current files partitioned into (must-scan pre-evolution files,
@@ -1571,8 +1551,35 @@ class LakeCatalog(spark: SparkSession, root: String) {
     (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile)
      else w).parquet(dir.toString)
     val added = listParquet(dir).filterNot(before)
-    (added, recordFileStats(ns, table, added))
+    (added, recordFileStats(ns, table, added, currentSchemaId(ns, table)))
   }
+
+  /** Writes `row` as one parquet file in `dir` on the driver, through the
+    * output writer a Spark write task uses: the same codec, footer and
+    * `part-00000-<uuid>-c000` name. The file is written under a hidden name
+    * and published by one rename, so no reader sees it half written.
+    * Returns the file's name. */
+  private def writeRowFile(dir: String, schema: StructType, row: Row): String =
+    org.apache.spark.sql.internal.SQLConf.withExistingConf(spark.sessionState.conf) {
+      val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
+      val writers = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+        .prepareWrite(spark, job, Map.empty, schema)
+      val task = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(job.getConfiguration,
+        new org.apache.hadoop.mapreduce.TaskAttemptID("", 0, org.apache.hadoop.mapreduce.TaskType.MAP, 0, 0))
+      val name = s"part-00000-${java.util.UUID.randomUUID}-c000${writers.getFileExtension(task)}"
+      val staged = new org.apache.hadoop.fs.Path(dir, s".$name.inprogress")
+      val fs = staged.getFileSystem(job.getConfiguration)
+      try {
+        val w = writers.newInstance(staged.toString, schema, task)
+        try w.write(org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToCatalystConverter(schema)(row)
+          .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
+        finally w.close()
+        if (!fs.rename(staged, new org.apache.hadoop.fs.Path(dir, name)))
+          throw new java.io.IOException(s"could not publish $name in $dir")
+      } catch { case e: Throwable => fs.delete(staged, false); throw e }
+      name
+    }
 
   // ------------------------------------------------ manifest stats sidecar
   // The `filestats` sidecar: one line per data file ever written,
@@ -1645,15 +1652,15 @@ class LakeCatalog(spark: SparkSession, root: String) {
     } finally r.close()
   }
 
-  /** Records each file's rows, bounds, byte size and the id of the current
-    * schema it was written under. Returns the total row count across
+  /** Records each file's rows, bounds, byte size and `schemaId`, the id of
+    * the schema it was written under. Returns the total row count across
     * `files` (from the same footer reads that feed the sidecar — pure
     * metadata IO). */
-  private def recordFileStats(ns: String, table: String, files: Seq[String]): Long =
+  private def recordFileStats(ns: String, table: String, files: Seq[String],
+                              schemaId: Option[Int]): Long =
     if (files.isEmpty) 0L
     else {
       val dir = Paths.get(tablePath(ns, table))
-      val schemaId = metaOf(ns, table).flatMap(_.schema).map(_.id)
       var total = 0L
       val lines = files.map { f =>
         val (rows, bounds) = footerInfo(dir.resolve(f))
@@ -1667,8 +1674,17 @@ class LakeCatalog(spark: SparkSession, root: String) {
 
   /** All recorded per-file row counts for this table. */
   private def fileStats(ns: String, table: String): Map[String, Long] =
-    Sidecar.fileStats(sidecar(ns, table, Sidecar.FileStats))
-      .flatMap(s => s.rows.map(s.file -> _)).toMap
+    statLines(ns, table).flatMap { case (f, s) => s.rows.map(f -> _) }
+
+  /** The table's `filestats` lines by file (a later line for a file wins). */
+  private def statLines(ns: String, table: String): Map[String, Sidecar.FileStat] =
+    Sidecar.fileStats(sidecar(ns, table, Sidecar.FileStats)).map(s => s.file -> s).toMap
+
+  /** Whether file `f` in `dir` still has the byte size its commit recorded:
+    * then its recorded row count and schema describe it. */
+  private def intact(dir: Path, stats: Map[String, Sidecar.FileStat])(f: String): Boolean =
+    stats.get(f).flatMap(_.bytes).exists(b =>
+      try Files.size(dir.resolve(f)) == b catch { case _: java.io.IOException => false })
 
   /** Per-file numeric zone maps (column → [min,max]) recorded at commit
     * time — empty map for files written before bounds existed. A column
@@ -1933,15 +1949,11 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val hasPartitionDirs = Files.isDirectory(dir) &&
       listDir(dir).exists(p => Files.isDirectory(p) && p.getFileName.toString.contains("="))
     val cur = currentFiles(ns, table).getOrElse(listParquet(dir))
-    val lines = Sidecar.fileStats(sidecar(ns, table, Sidecar.FileStats))
-      .map(s => s.file -> s).toMap
-    def intact(f: String): Boolean = lines.get(f).exists { s =>
-      s.rows.isDefined && s.bytes.exists(b =>
-        try Files.size(dir.resolve(f)) == b catch { case _: java.io.IOException => false })
-    }
+    val lines = statLines(ns, table)
     // empty file list means "not a snapshot-logged catalog table here"
     // (flat single-file warehouse, alias, or missing) — never claim it
-    if (!hasPartitionDirs && cur.nonEmpty && cur.forall(intact)) {
+    if (!hasPartitionDirs && cur.nonEmpty &&
+        cur.forall(f => intact(dir, lines)(f) && lines(f).rows.isDefined)) {
       // merge-on-read deletes: manifest counts are PHYSICAL rows; subtract
       // the deletion-vector positions visible at the current version for
       // files in the current snapshot (still metadata-only — DV lines are
@@ -1997,7 +2009,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     Sidecar.replace(sidecar(ns, table, Sidecar.Meta), Iterator(Sidecar.metaLine(
       s"$ns.$table", schema, partitionSpec, sortOrder, properties)))
     val v0Files = listParquet(dir)
-    recordFileStats(ns, table, v0Files) // the v0 schema file: 0 rows
+    recordFileStats(ns, table, v0Files, currentSchemaId(ns, table)) // the v0 schema file: 0 rows
     commitSnapshot(ns, table, v0Files) // v0: the empty table
   }
 
@@ -2035,9 +2047,16 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * semantics: a row violates only when the predicate is FALSE — NULL
     * passes. */
   def checkConstraints(ns: String, table: String): Map[String, String] =
-    tableMeta(ns, table)._3.collect {
+    constraintsIn(tableMeta(ns, table)._3)
+
+  /** The CHECK constraints among table `properties`, by name. */
+  private def constraintsIn(properties: Map[String, String]): Map[String, String] =
+    properties.collect {
       case (k, v) if k.startsWith("check.") => k.stripPrefix("check.") -> v
     }
+
+  private def violation(name: String, cond: String, bad: Long) = new ConstraintViolationException(
+    s"CHECK constraint $name ($cond) violated by $bad incoming rows — batch refused, nothing committed")
 
   /** Iceberg-style table format version, from the `format-version`
     * property. Tables created without the property (including the flat
@@ -2179,8 +2198,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
              batch: Option[Long] = None): Long = {
     val pinned = constraintChecked(ns, table, df)
     val (newFiles, rows) = writeNewFilesCounted(ns, table, pinned)
-    commitSnapshot(ns, table,
-      currentFiles(ns, table).getOrElse(Seq.empty) ++ newFiles, batch)
+    commitSnapshot(ns, table, newFiles, batch, appended = true)
     rows
   }
 
@@ -2202,9 +2220,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
       val pinned = df.localCheckpoint()
       cons.foreach { case (name, cond) =>
         val bad = pinned.where(!coalesce(expr(cond), lit(true))).count()
-        if (bad > 0) throw new ConstraintViolationException(
-          s"CHECK constraint $name ($cond) violated by $bad incoming rows — " +
-            "batch refused, nothing committed")
+        if (bad > 0) throw violation(name, cond, bad)
       }
       pinned
     }
@@ -2250,8 +2266,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val clustered = df.repartitionByRange(numFiles, keys: _*)
       .sortWithinPartitions(keys: _*)
     val newFiles = writeNewFiles(ns, table, clustered, maxRecordsPerFile)
-    commitSnapshot(ns, table,
-      currentFiles(ns, table).getOrElse(Seq.empty) ++ newFiles)
+    commitSnapshot(ns, table, newFiles, appended = true)
   }
 
   /** Z-ordered append (Iceberg `rewrite_data_files(strategy => 'sort',
@@ -2299,8 +2314,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
       .sortWithinPartitions(col("_z"))
       .drop("_z")
     val newFiles = writeNewFiles(ns, table, clustered, maxRecordsPerFile)
-    commitSnapshot(ns, table,
-      currentFiles(ns, table).getOrElse(Seq.empty) ++ newFiles)
+    commitSnapshot(ns, table, newFiles, appended = true)
   }
 
   /** Cherry-pick an APPEND snapshot from a branch onto main (Iceberg
@@ -2328,8 +2342,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
       s"snapshot $headV is not an append (parent files were removed) — " +
         "cherry-pick is only defined for append snapshots")
     val added = headFiles.filterNot(parentFiles.toSet)
-    commitSnapshot(ns, table,
-      currentFiles(ns, table).getOrElse(Seq.empty) ++ added)
+    commitSnapshot(ns, table, added, appended = true)
   }
 
   // --------------------------------------------------- row lineage (v3)
@@ -2404,9 +2417,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
       s"ADD FILES landing dir must be a subdirectory of namespace $ns (got '$srcDir')")
     val imported = listParquet(landing).map(f => s"../$srcDir/$f")
     if (imported.nonEmpty) {
-      recordFileStats(ns, table, imported)
-      commitSnapshot(ns, table,
-        currentFiles(ns, table).getOrElse(Seq.empty) ++ imported)
+      recordFileStats(ns, table, imported, currentSchemaId(ns, table))
+      commitSnapshot(ns, table, imported, appended = true)
     }
     imported.size
   }
@@ -2564,11 +2576,27 @@ class LakeCatalog(spark: SparkSession, root: String) {
   }
 
   /** Single typed-row INSERT (the reference's whole INSERT surface,
-    * IcebergConnection.py:133-187) — a degenerate one-row append. */
+    * IcebergConnection.py:133-187), under the current schema. Like the
+    * reference's one-Arrow-row append it starts no Spark job: the CHECK
+    * constraints are evaluated over the one-row local relation, and the
+    * row is written on the driver ([[writeRowFile]]). A table without a
+    * schema history takes the [[append]] path. */
   def insertRow(ns: String, table: String, values: Seq[Any]): Unit = {
-    // the current schema: the row lands under the current column names
-    append(ns, table, spark.createDataFrame(
-      java.util.List.of(Row.fromSeq(values)), tableSchema(ns, table)))
+    val meta = metaOf(ns, table)
+    val row = Row.fromSeq(values)
+    val one = spark.createDataFrame(java.util.List.of(row),
+      meta.flatMap(_.schema).fold(tableSchema(ns, table))(_.struct))
+    meta.flatMap(m => m.schema.map(m -> _)) match {
+      case None => append(ns, table, one)
+      case Some((m, current)) =>
+        constraintsIn(m.properties).foreach { case (name, cond) =>
+          if (!one.where(!coalesce(expr(cond), lit(true))).isEmpty)
+            throw violation(name, cond, 1)
+        }
+        val file = writeRowFile(tablePath(ns, table), current.struct, row)
+        recordFileStats(ns, table, Seq(file), Some(current.id))
+        commitSnapshot(ns, table, Seq(file), appended = true)
+    }
   }
 
   // ------------------------------------------------ hidden partitioning (r7)
@@ -2861,12 +2889,19 @@ class LakeCatalog(spark: SparkSession, root: String) {
   // layouts the touched set is a sliver of the table, and the "find" pass
   // is a pushdown-filtered scan that only reads the predicate's columns.
 
+  /** The distinct rows of `df`: each task drops its own repeats and the
+    * driver merges the rest, so the set costs one job and no shuffle, and
+    * the driver receives each row at most once per task. */
+  private def distinctRows(df: DataFrame): Set[Row] =
+    df.mapPartitions(rows => rows.toSet.iterator)(org.apache.spark.sql.Encoders.row(df.schema))
+      .collect().toSet
+
   /** The files of `cur` holding a row that `matching` keeps of their scan. */
   private def touchedFiles(ns: String, table: String, cur: Seq[String])
                           (matching: DataFrame => DataFrame): Seq[String] = {
     if (cur.isEmpty) return Seq.empty
-    val touched = matching(scan(ns, table, cur, pos = true))
-      .select(col("__dv_file")).distinct().collect().map(_.getString(0)).toSet
+    val touched = distinctRows(matching(scan(ns, table, cur, pos = true))
+      .select(col("__dv_file"))).map(_.getString(0))
     // compare by BASENAME on both sides: cloned tables commit `../src/f`
     // references whose physical scan paths still end in the unique part-file
     // name (names carry write UUIDs, so cross-table collisions can't happen)
@@ -2955,32 +2990,22 @@ class LakeCatalog(spark: SparkSession, root: String) {
   }
 
   /** MERGE (upsert) by key: source rows replace target rows with the same
-    * key; unmatched source rows are inserts. Only files containing matched
-    * keys are rewritten; inserts land as fresh files. The source is
-    * broadcast into both probe and rewrite joins (upsert batches are small
-    * next to the table — the Iceberg MERGE assumption). */
+    * key; unmatched source rows are inserts. The distinct non-null source
+    * keys come to the driver once (upsert batches are small next to the
+    * table — the Iceberg MERGE assumption) and probe the target as an IN
+    * list. Only files holding a matched key are rewritten, keeping their
+    * rows whose key is NULL or not a source key; the deduplicated source
+    * lands beside them. */
   def merge(ns: String, table: String, rawSource: DataFrame, key: String): Unit = {
-    // A source batch with a repeated key would otherwise survive both the
-    // left_semi (updates) split twice and insert duplicate rows for that key.
-    val source = onePerKey(rawSource, key)
+    val keys = distinctRows(rawSource.select(col(key)).where(col(key).isNotNull))
+      .toSeq.map(_.get(0))
+    val inKeys = col(key).isInCollection(keys)
     val cur = liveFiles(ns, table)
-    val srcKeys = broadcast(source.select(col(key)).distinct())
-    val touched = touchedFiles(ns, table, cur)(_.join(srcKeys, Seq(key), "left_semi"))
-    // Rewritten touched files: unmatched rows survive, matched keys take
-    // the source row wholesale; inserts = source keys absent from the
-    // target. Matched keys are derived from the TOUCHED FILES' rows, never
-    // a full-target key scan — every target row matching a source key
-    // lives in a touched file by construction, and the touched sliver
-    // (not the 100 TB table) is what's safe to broadcast.
+    val touched = touchedFiles(ns, table, cur)(_.where(inKeys))
     // DV-aware (see deleteWhere): never resurrect MOR-deleted rows
-    val touchedDf = readFilesDv(ns, table, touched, currentVersion(ns, table))
-    val matchedKeys = broadcast(touchedDf.select(col(key)).distinct())
-    val survivors = touchedDf
-      .join(srcKeys, Seq(key), "left_anti")
-    val updates = source.join(matchedKeys, Seq(key), "left_semi")
-    val inserts = source.join(matchedKeys, Seq(key), "left_anti")
-    val newData = survivors.unionByName(updates).unionByName(inserts)
-    val newFiles = writeNewFiles(ns, table, newData)
+    val survivors = readFilesDv(ns, table, touched, currentVersion(ns, table))
+      .where(coalesce(!inKeys, lit(true)))
+    val newFiles = writeNewFiles(ns, table, survivors.unionByName(onePerKey(rawSource, key)))
     commitSnapshot(ns, table, cur.diff(touched) ++ newFiles)
   }
 

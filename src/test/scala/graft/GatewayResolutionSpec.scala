@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.catalog.{AmbiguousTableException, LakeCatalog, SqlGateway}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -113,25 +112,12 @@ class GatewayResolutionSpec extends SparkSpec {
 
   test("a repeat SELECT on an unchanged table launches no Spark job inside execute()") {
     val sql = "SELECT c_name, SUM(o_total) FROM orders JOIN customer ON o_cust = c_id GROUP BY c_name"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    def jobsIn(f: => Unit): Int = {
-      org.apache.spark.SpecBus.drain(spark.sparkContext)
-      jobs.set(0)
-      f
-      org.apache.spark.SpecBus.drain(spark.sparkContext)
-      jobs.get
-    }
+    def jobsIn(f: => Unit): Int = org.apache.spark.SpecBus.jobsIn(spark.sparkContext)(f)
     val (_, gw) = fixture()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // the first load of these files infers their schema: a Spark job
-      assert(jobsIn(gw.execute(sql)) >= 1)
-      gw.execute(sql).collect()
-      assert(jobsIn(gw.execute(sql)) == 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // the files are read under their recorded schema: no inference job
+    assert(jobsIn(gw.execute(sql)) == 0)
+    gw.execute(sql).collect()
+    assert(jobsIn(gw.execute(sql)) == 0)
   }
 
   test("results equal registering every table before the query") {
