@@ -30,8 +30,12 @@ object Sessions {
       // 32 distinct plans of churn alone add +1.3 s wall / +9 s cpu to its
       // next run). 5000 entries fits every plan in the registry at a few
       // KB-100 KB of bytecode each — static conf, must be set before the
-      // first session. On a long-lived multi-tenant driver the same
-      // sizing rule applies: maxEntries >= concurrent distinct plans.
+      // first session. The cache is keyed on the generated source, and
+      // graft.plans.ParamLiterals keeps comparison, arithmetic and IN
+      // constants out of it, so an entry stands for a query SHAPE: an MCP
+      // agent re-sending a SELECT or a write with new constants hits it.
+      // On a long-lived multi-tenant driver the same sizing rule applies:
+      // maxEntries >= concurrent distinct shapes.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       // Shuffle/spill files on tmpfs: the container's virtual disk shows
       // multi-second (sometimes multi-minute) write stalls under load,

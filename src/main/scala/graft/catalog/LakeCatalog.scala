@@ -1,8 +1,11 @@
 package graft.catalog
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_list, count, expr, floor, greatest, least, lit, max, min, pmod, shiftleft, slice, sort_array, substring_index, sum, when, xxhash64}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_list, count, expr, floor, greatest, least, lit, max, min, pmod, shiftleft, slice, sort_array, struct, substring_index, sum, when, xxhash64}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -1050,9 +1053,14 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val eqLive = liveEqDeletes(ns, table, atV)
     val eqPairs = eqKeyFilePairs(eqLive, inScan, fileAddedVersion(ns, table))
     var df = df0
+    // inline DV pairs: one (file, pos) set-membership predicate, evaluated
+    // in the scan's own stage (a broadcast join of the pairs is a Spark job
+    // of its own on every read); the struct key is never NULL
     if (pairs.nonEmpty) {
-      val dvDf = spark.createDataFrame(pairs).toDF("__dv_file", "__dv_pos")
-      df = df.join(broadcast(dvDf), Seq("__dv_file", "__dv_pos"), "left_anti")
+      val dead: Set[Any] = pairs.map { case (f, p) =>
+        InternalRow(UTF8String.fromString(f), p) }.toSet
+      val key = GraftBridge.expression(struct(col("__dv_file"), col("__dv_pos")))
+      df = df.where(!GraftBridge.column(InSet(key, dead)))
     }
     // ref-shaped DV lines: the delete-file parquet joins DISTRIBUTED (no
     // broadcast hint — a billion-row delete file must be free to shuffle;

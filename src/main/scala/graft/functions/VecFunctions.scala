@@ -208,5 +208,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // lake tables as Catalyst relations for the gateway statement bound on
     // the analyzing thread; a no-op everywhere else
     ext.injectHintResolutionRule(_ => graft.catalog.LakeRelationRule)
+    // comparison, arithmetic and IN operands read from generated-code
+    // fields, so a statement re-run with new constants reuses its class
+    ext.injectColumnar(_ => graft.plans.ParamLiterals.columnar)
   }
 }

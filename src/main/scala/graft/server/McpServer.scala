@@ -122,6 +122,8 @@ class McpServer(spark: SparkSession, warehouse: String, maxRows: Int = 1000) {
         else row.get(i) match {
           case n: Int => JInt(BigInt(n))
           case n: Long => JInt(BigInt(n))
+          case n: Short => JInt(BigInt(n))
+          case n: Byte => JInt(BigInt(n))
           case n: Double => JDouble(n)
           case n: Float => JDouble(n.toDouble)
           case n: java.math.BigDecimal => JDecimal(BigDecimal(n))

@@ -368,4 +368,11 @@ class McpServerSpec extends SparkSpec {
     assert(text.contains("(truncated to 5 rows)"), text.take(120))
     assert(text.linesIterator.count(_.contains("doc_id")) == 5)
   }
+
+  test("TINYINT and SMALLINT values render as JSON numbers") {
+    val resp = call("""{"jsonrpc":"2.0","id":9,"method":"tools/call","params":{"name":"query_table","arguments":{"query":"SELECT CAST(7 AS SMALLINT) AS s, CAST(1 AS TINYINT) AS b"}}}""")
+    val text = toolText(resp)
+    val rows = JsonMethods.parse(text.substring(text.indexOf('\n') + 1))
+    assert(rows == JArray(List(JObject("s" -> JInt(7), "b" -> JInt(1)))), text)
+  }
 }

@@ -10,14 +10,15 @@ class WriteJobBudgetSpec extends SparkSpec {
   private val schema = StructType(Seq(StructField("k", LongType),
     StructField("c", LongType), StructField("p", DoubleType), StructField("s", StringType)))
 
-  /** `shop.orders` with 40 rows over four commits, `shop.stage` with two rows
+  /** `shop.orders` (format-version 2, so it takes deletion vectors) with 40
+    * rows over four commits, `shop.stage` with two rows
     * (one matching an order key, one new) and `shop.checked` carrying a
     * CHECK constraint, each behind a gateway. */
   private lazy val gw: SqlGateway = {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_write_budget").toString
     val cat = new LakeCatalog(spark, root)
-    cat.createTable("shop", "orders", schema)
+    cat.createTable("shop", "orders", schema, properties = Map("format-version" -> "2"))
     (0 until 4).foreach { i =>
       cat.append("shop", "orders", (i * 10 until i * 10 + 10)
         .map(k => (k.toLong, (k % 5).toLong, k * 1.5, s"o$k")).toDF("k", "c", "p", "s").coalesce(1))
@@ -42,7 +43,10 @@ class WriteJobBudgetSpec extends SparkSpec {
       "INSERT INTO shop.checked VALUES (1, 1, 2.5, 'ok')" -> 0,
       "UPDATE shop.orders SET p = p + 1 WHERE c = 2" -> 2,
       "DELETE FROM shop.orders WHERE c = 4" -> 2,
-      "MERGE INTO shop.orders USING shop.stage ON k" -> 4)
+      "MERGE INTO shop.orders USING shop.stage ON k" -> 4,
+      // the first on a table without deletion vectors, the second on one with
+      "DELETE MOR FROM shop.orders WHERE c = 3" -> 3,
+      "DELETE MOR FROM shop.orders WHERE k = 7" -> 3)
     budgets.foreach { case (sql, budget) =>
       val n = jobs(sql)
       info(s"$n jobs: $sql")

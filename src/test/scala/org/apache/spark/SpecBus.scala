@@ -2,10 +2,12 @@ package org.apache.spark
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Waits until every posted listener event has been delivered, so a spec's
-  * SparkListener counts are complete before it asserts on them. */
+  * SparkListener counts are complete before it asserts on them, and counts
+  * what a block of work costs in jobs and in generated-code compiles. */
 object SpecBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
@@ -22,5 +24,14 @@ object SpecBus {
       drain(sc)
       jobs.get
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** The generated classes compiled while `f` runs: compiles happen only on
+    * a miss in the generated-code cache, and each one records a compile time.
+    * The count is JVM-wide, so `f` must be the only work running. */
+  def compilesIn(f: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 }
