@@ -37,6 +37,10 @@ object Sessions {
       // On a long-lived multi-tenant driver the same sizing rule applies:
       // maxEntries >= concurrent distinct shapes.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // Local files through java.nio permissions: without native IO,
+      // Hadoop's LocalFileSystem forks `chmod` for every file and directory
+      // a write creates (about 5 ms each, 315 forks in one lake_writes run).
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       // Shuffle/spill files on tmpfs: the container's virtual disk shows
       // multi-second (sometimes multi-minute) write stalls under load,
       // which serialized every shuffle-heavy operator through a sick

@@ -149,7 +149,7 @@ class LakeCatalog(spark: SparkSession, root: String) {
     // check and the append below are NOT atomic: nothing serializes
     // commits, so two threads committing to one table at once can both
     // pass the check (a real catalog does this CAS against its metastore;
-    // the concurrent-writer harness of ROADMAP item 3 is where that gets
+    // the concurrent-writer harness of ROADMAP item 4 is where that gets
     // fixed). Failed commits leave their staged files unreferenced —
     // exactly the debris [[removeOrphans]] exists to sweep.
     expectedBase.foreach { e =>
@@ -606,18 +606,6 @@ class LakeCatalog(spark: SparkSession, root: String) {
   // pre-evolution files stay must-scan (prunable only by their zone
   // maps) — exactly the asymmetry Iceberg documents for spec evolution.
 
-  private def listParquetRecursive(dir: Path): Seq[String] =
-    if (!Files.exists(dir) || !Files.isDirectory(dir)) Seq.empty
-    else {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val walk = Files.walk(dir)
-      try walk.forEach { p =>
-        val rel = dir.relativize(p).toString.replace('\\', '/')
-        if (rel.endsWith(".parquet")) out += rel
-      } finally walk.close()
-      out.toSeq.sorted
-    }
-
   /** Append under an EVOLVED partition spec: rows land in
     * `_p=<partCol value>/` subdirectories (partition values must be
     * path-safe tokens — the synthetic sources are). The partition column
@@ -625,12 +613,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * every reader — snapshots, incremental scans, CDC — is layout-blind. */
   def appendEvolved(ns: String, table: String, df: DataFrame,
                     partCol: String): Unit = {
-    val dir = Paths.get(tablePath(ns, table))
-    val before = listParquetRecursive(dir).toSet
-    df.withColumn("_p", col(partCol)).write.mode("append")
-      .partitionBy("_p").parquet(dir.toString)
-    val added = listParquetRecursive(dir).filterNot(before)
-    recordFileStats(ns, table, added, currentSchemaId(ns, table))
+    val added = writeNewFiles(ns, table, df.withColumn("_p", col(partCol)),
+      partitionBy = Seq("_p"))
     commitSnapshot(ns, table, added, appended = true)
   }
 
@@ -1535,150 +1519,48 @@ class LakeCatalog(spark: SparkSession, root: String) {
     (ins, delA.unionByName(delB))
   }
 
-  /** Write `df` as new immutable data files in the table dir, returning the
-    * new files' names (directory-diff before/after — single-writer commit,
-    * same assumption as the reference's catalog). Each new file's row count
-    * is read from its parquet FOOTER (metadata IO only, no Spark job) and
-    * persisted to the manifest-stats sidecar at commit time — the Iceberg
-    * manifest property that lets filesMeta and COUNT(*) answer from
-    * metadata without ever scanning data. */
+  /** Writes `df` as new immutable data files of the table through
+    * [[LakeWriter]] and returns their names: exactly the files this write
+    * published, so another writer's files in the directory are never taken
+    * for its own. Each file's row count, byte size and zone map come from
+    * the footer its task closed and are recorded in the manifest-stats
+    * sidecar — the Iceberg manifest property that lets filesMeta and
+    * COUNT(*) answer from metadata without ever scanning data. */
   private def writeNewFiles(ns: String, table: String, df: DataFrame,
-                            maxRecordsPerFile: Long = 0L): Seq[String] =
-    writeNewFilesCounted(ns, table, df, maxRecordsPerFile)._1
+                            maxRecordsPerFile: Long = 0L,
+                            partitionBy: Seq[String] = Seq.empty): Seq[String] =
+    writeNewFilesCounted(ns, table, df, maxRecordsPerFile, partitionBy)._1
 
-  /** [[writeNewFiles]] + the written ROW COUNT, read from the parquet
-    * footers the stats sidecar records anyway (r14, guide §1.2): callers
-    * that need "how many rows did this batch land" ([[applyCdcMor]]) get it
-    * for free instead of re-running the batch pipeline as a second Spark
-    * action. */
+  /** [[writeNewFiles]] + the written ROW COUNT, from the footers the stats
+    * sidecar records anyway (r14, guide §1.2): callers that need "how many
+    * rows did this batch land" ([[applyCdcMor]]) get it for free instead of
+    * re-running the batch pipeline as a second Spark action. */
   private def writeNewFilesCounted(ns: String, table: String, df: DataFrame,
-                                   maxRecordsPerFile: Long = 0L): (Seq[String], Long) = {
-    val dir = Paths.get(tablePath(ns, table))
-    val before = listParquet(dir).toSet
-    val w = df.write.mode("append")
-    (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile)
-     else w).parquet(dir.toString)
-    val added = listParquet(dir).filterNot(before)
-    (added, recordFileStats(ns, table, added, currentSchemaId(ns, table)))
+                                   maxRecordsPerFile: Long = 0L,
+                                   partitionBy: Seq[String] = Seq.empty): (Seq[String], Long) = {
+    val written = LakeWriter.write(spark, df, tablePath(ns, table), partitionBy, maxRecordsPerFile)
+    recordFileStats(ns, table, written, currentSchemaId(ns, table))
+    (written.map(_.name), written.map(_.rows).sum)
   }
-
-  /** Writes `row` as one parquet file in `dir` on the driver, through the
-    * output writer a Spark write task uses: the same codec, footer and
-    * `part-00000-<uuid>-c000` name. The file is written under a hidden name
-    * and published by one rename, so no reader sees it half written.
-    * Returns the file's name. */
-  private def writeRowFile(dir: String, schema: StructType, row: Row): String =
-    org.apache.spark.sql.internal.SQLConf.withExistingConf(spark.sessionState.conf) {
-      val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
-      val writers = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-        .prepareWrite(spark, job, Map.empty, schema)
-      val task = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(job.getConfiguration,
-        new org.apache.hadoop.mapreduce.TaskAttemptID("", 0, org.apache.hadoop.mapreduce.TaskType.MAP, 0, 0))
-      val name = s"part-00000-${java.util.UUID.randomUUID}-c000${writers.getFileExtension(task)}"
-      val staged = new org.apache.hadoop.fs.Path(dir, s".$name.inprogress")
-      val fs = staged.getFileSystem(job.getConfiguration)
-      try {
-        val w = writers.newInstance(staged.toString, schema, task)
-        try w.write(org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToCatalystConverter(schema)(row)
-          .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
-        finally w.close()
-        if (!fs.rename(staged, new org.apache.hadoop.fs.Path(dir, name)))
-          throw new java.io.IOException(s"could not publish $name in $dir")
-      } catch { case e: Throwable => fs.delete(staged, false); throw e }
-      name
-    }
 
   // ------------------------------------------------ manifest stats sidecar
   // The `filestats` sidecar: one line per data file ever written,
-  // {"file":"part-...","rows":N} — written at commit time from the parquet
-  // footer (the write-side analog of Iceberg manifest entries). Files from
-  // before this sidecar existed simply have no entry; readers fall back to
-  // a footer-level scan for those.
+  // {"file":"part-...","rows":N,...} — written at commit time from what the
+  // writer read in the file's footer (the write-side analog of Iceberg
+  // manifest entries). Files from before this sidecar existed simply have
+  // no entry; readers fall back to a footer-level scan for those.
 
   /** Row count from the parquet footer — pure metadata IO, no Spark job. */
-  private def footerRowCount(file: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri),
-      spark.sessionState.newHadoopConf())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
-
-  /** (row count, per-column [min,max] zone map) from the parquet footer —
-    * one metadata read serves both. Bounds cover NUMERIC top-level columns
-    * (the zone-map sweet spot: keys, timestamps, prices); a column whose
-    * statistics are absent in any block simply gets no bounds, and readers
-    * treat bound-less files as must-read. This is Iceberg's manifest
-    * lower_bounds/upper_bounds, sourced from the same place Iceberg writers
-    * source them (the file footer the writer just produced). */
-  private def footerInfo(file: Path): (Long, Map[String, (Double, Double)]) = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri),
-      spark.sessionState.newHadoopConf())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      val perCol = blocks.flatMap(_.getColumns.asScala).flatMap { cc =>
-        val st = cc.getStatistics
-        if (st == null || st.isEmpty || !st.hasNonNullValue) Seq.empty
-        else {
-          // roundUp steers the widening direction for BIGINT values beyond
-          // 2^53 (not double-representable): rounding may only LOOSEN a
-          // bound, never tighten it — a tightened bound would let
-          // pruneFiles "prove" disjointness for a file that has matches
-          // (ADVICE r4). Iceberg keeps exact typed bounds; the double
-          // sidecar keeps conservative ones.
-          def num(v: Any, roundUp: Boolean): Option[Double] = v match {
-            case l: java.lang.Long =>
-              val d = l.toDouble
-              Some(if (math.abs(l) < (1L << 53)) d
-                   else if (roundUp) Math.nextUp(d) else Math.nextDown(d))
-            case i: java.lang.Integer => Some(i.toDouble)
-            case d: java.lang.Double => Some(d)
-            case f: java.lang.Float => Some(f.toDouble)
-            case _ => None // binary/bool columns: no numeric zone map
-          }
-          (num(st.genericGetMin, roundUp = false),
-            num(st.genericGetMax, roundUp = true)) match {
-            // non-finite bounds (±Inf legitimately stored in parquet stats,
-            // NaN from older writers) would serialize as 'Infinity'/'NaN'
-            // tokens Jackson rejects — poisoning EVERY sidecar read for the
-            // table (ADVICE r4). Such columns simply get no bounds, the
-            // existing absent-stats path: readers treat the file must-read.
-            case (Some(lo), Some(hi)) if lo.isFinite && hi.isFinite =>
-              Seq(cc.getPath.toDotString -> (lo, hi))
-            case _ => Seq.empty
-          }
-        }
-      }
-      val bounds = perCol.groupBy(_._1)
-        // a column must have stats in EVERY block to claim file-level bounds
-        .filter { case (_, vs) => vs.length == blocks.length }
-        .map { case (c, vs) => c -> (vs.map(_._2._1).min, vs.map(_._2._2).max) }
-      (r.getRecordCount, bounds)
-    } finally r.close()
-  }
+  private def footerRowCount(file: Path): Long =
+    LakeWriter.footerInfo(spark.sessionState.newHadoopConf(),
+      new org.apache.hadoop.fs.Path(file.toUri))._1
 
   /** Records each file's rows, bounds, byte size and `schemaId`, the id of
-    * the schema it was written under. Returns the total row count across
-    * `files` (from the same footer reads that feed the sidecar — pure
-    * metadata IO). */
-  private def recordFileStats(ns: String, table: String, files: Seq[String],
-                              schemaId: Option[Int]): Long =
-    if (files.isEmpty) 0L
-    else {
-      val dir = Paths.get(tablePath(ns, table))
-      var total = 0L
-      val lines = files.map { f =>
-        val (rows, bounds) = footerInfo(dir.resolve(f))
-        total += rows
-        Sidecar.fileStatLine(f, rows, Files.size(dir.resolve(f)), schemaId,
-          bounds.toSeq.sortBy(_._1))
-      }
-      Sidecar.append(sidecar(ns, table, Sidecar.FileStats), lines)
-      total
-    }
+    * the schema it was written under. */
+  private def recordFileStats(ns: String, table: String, files: Seq[WrittenFile],
+                              schemaId: Option[Int]): Unit =
+    if (files.nonEmpty) Sidecar.append(sidecar(ns, table, Sidecar.FileStats), files.map(f =>
+      Sidecar.fileStatLine(f.name, f.rows, f.bytes, schemaId, f.bounds.toSeq.sortBy(_._1))))
 
   /** All recorded per-file row counts for this table. */
   private def fileStats(ns: String, table: String): Map[String, Long] =
@@ -2010,15 +1892,14 @@ class LakeCatalog(spark: SparkSession, root: String) {
                   properties: Map[String, String] = Map.empty,
                   partitionSpec: Seq[String] = Seq.empty,
                   sortOrder: Seq[String] = Seq.empty): Unit = {
-    val dir = Paths.get(s"$root/$ns/$table")
-    Files.createDirectories(dir)
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      .write.mode("overwrite").parquet(dir.toString)
+    val dir = s"$root/$ns/$table"
+    deleteTree(Paths.get(dir)) // a re-created table starts from an empty directory
+    val v0 = LakeWriter.write(spark,
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), dir)
     Sidecar.replace(sidecar(ns, table, Sidecar.Meta), Iterator(Sidecar.metaLine(
       s"$ns.$table", schema, partitionSpec, sortOrder, properties)))
-    val v0Files = listParquet(dir)
-    recordFileStats(ns, table, v0Files, currentSchemaId(ns, table)) // the v0 schema file: 0 rows
-    commitSnapshot(ns, table, v0Files) // v0: the empty table
+    recordFileStats(ns, table, v0, currentSchemaId(ns, table)) // the v0 schema file: 0 rows
+    commitSnapshot(ns, table, v0.map(_.name)) // v0: the empty table
   }
 
   /** Declared table metadata from the `meta` sidecar:
@@ -2264,8 +2145,8 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * distributed sort uses at 100 TB; deterministic for a fixed input),
     * sorted within each band, and optionally split into files of at most
     * `maxRecordsPerFile` rows. Every resulting file covers a narrow key
-    * range, so the per-file [min,max] bounds [[recordFileStats]] reads from
-    * the freshly-written footers form (near-)disjoint bands — the layout
+    * range, so the per-file [min,max] bounds [[LakeWriter]] reads from
+    * the footers it closed form (near-)disjoint bands — the layout
     * that lets [[pruneFiles]] drop whole files from metadata alone. */
   def appendClustered(ns: String, table: String, df: DataFrame,
                       sortCols: Seq[String], numFiles: Int,
@@ -2423,10 +2304,15 @@ class LakeCatalog(spark: SparkSession, root: String) {
     val landing = nsRoot.resolve(srcDir).normalize
     require(landing.startsWith(nsRoot) && landing != nsRoot,
       s"ADD FILES landing dir must be a subdirectory of namespace $ns (got '$srcDir')")
-    val imported = listParquet(landing).map(f => s"../$srcDir/$f")
+    val conf = spark.sessionState.newHadoopConf()
+    val imported = listParquet(landing).map { f =>
+      val file = landing.resolve(f)
+      val (rows, bounds) = LakeWriter.footerInfo(conf, new org.apache.hadoop.fs.Path(file.toUri))
+      WrittenFile(s"../$srcDir/$f", rows, Files.size(file), bounds)
+    }
     if (imported.nonEmpty) {
       recordFileStats(ns, table, imported, currentSchemaId(ns, table))
-      commitSnapshot(ns, table, imported, appended = true)
+      commitSnapshot(ns, table, imported.map(_.name), appended = true)
     }
     imported.size
   }
@@ -2587,13 +2473,16 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * IcebergConnection.py:133-187), under the current schema. Like the
     * reference's one-Arrow-row append it starts no Spark job: the CHECK
     * constraints are evaluated over the one-row local relation, and the
-    * row is written on the driver ([[writeRowFile]]). A table without a
-    * schema history takes the [[append]] path. */
+    * row is written on the driver ([[LakeWriter.writeRow]]). A table without a
+    * schema history takes the [[append]] path. `values` holds a value for
+    * every column in schema order, or [[LakeCatalog.Named]] values for some
+    * columns, the rest NULL; each is coerced to its column's type as
+    * [[LakeCatalog.coerce]] says, so a caller can pass literals as parsed. */
   def insertRow(ns: String, table: String, values: Seq[Any]): Unit = {
     val meta = metaOf(ns, table)
-    val row = Row.fromSeq(values)
-    val one = spark.createDataFrame(java.util.List.of(row),
-      meta.flatMap(_.schema).fold(tableSchema(ns, table))(_.struct))
+    val schema = meta.flatMap(_.schema).fold(tableSchema(ns, table))(_.struct)
+    val row = Row.fromSeq(LakeCatalog.rowValues(s"$ns.$table", schema, values))
+    val one = spark.createDataFrame(java.util.List.of(row), schema)
     meta.flatMap(m => m.schema.map(m -> _)) match {
       case None => append(ns, table, one)
       case Some((m, current)) =>
@@ -2601,9 +2490,9 @@ class LakeCatalog(spark: SparkSession, root: String) {
           if (!one.where(!coalesce(expr(cond), lit(true))).isEmpty)
             throw violation(name, cond, 1)
         }
-        val file = writeRowFile(tablePath(ns, table), current.struct, row)
+        val file = LakeWriter.writeRow(spark, tablePath(ns, table), current.struct, row)
         recordFileStats(ns, table, Seq(file), Some(current.id))
-        commitSnapshot(ns, table, Seq(file), appended = true)
+        commitSnapshot(ns, table, Seq(file.name), appended = true)
     }
   }
 
@@ -2875,19 +2764,18 @@ class LakeCatalog(spark: SparkSession, root: String) {
     * table must inherit none of them — deletes, blooms, renames, stats) and
     * its distributed delete-file payloads. */
   def dropTable(ns: String, table: String): Unit = {
-    val dir = Paths.get(s"$root/$ns/$table")
+    deleteTree(Paths.get(s"$root/$ns/$table"))
+    Sidecar.kinds.foreach(k => Sidecar.delete(sidecar(ns, table, k)))
+    deleteTree(Paths.get(s"$root/$ns/${table}_deletes"))
+  }
+
+  /** Deletes `dir` and everything under it, if it exists. */
+  private def deleteTree(dir: Path): Unit =
     if (Files.exists(dir)) {
       val w = Files.walk(dir)
       try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
       finally w.close()
     }
-    Sidecar.kinds.foreach(k => Sidecar.delete(sidecar(ns, table, k)))
-    val delDir = Paths.get(s"$root/$ns/${table}_deletes")
-    if (Files.exists(delDir)) {
-      Files.walk(delDir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-    }
-  }
 
   // ------------------------------------------------- copy-on-write mutations
   // All three follow the same file-granular COW shape Iceberg uses: find the
@@ -3191,6 +3079,56 @@ class LakeCatalog(spark: SparkSession, root: String) {
 }
 
 object LakeCatalog {
+
+  /** The value of column `column` in an [[LakeCatalog.insertRow]] that
+    * names its columns. */
+  final case class Named(column: String, value: Any)
+
+  /** The row `values` give under `schema`, each value coerced to its
+    * column's type: positional values must cover every column; with
+    * [[Named]] values a column not named is NULL. */
+  private[catalog] def rowValues(table: String, schema: StructType,
+                                 values: Seq[Any]): Seq[Any] = {
+    val fields = schema.fields.toSeq
+    val named = values.collect { case n: Named => n.column -> n.value }.toMap
+    if (named.isEmpty) {
+      require(values.length == fields.length,
+        s"INSERT arity mismatch: ${values.length} values for ${fields.length} columns in $table")
+      values.zip(fields).map { case (v, f) => coerce(v, f.dataType) }
+    } else fields.map(f => named.get(f.name).map(coerce(_, f.dataType)).orNull)
+  }
+
+  /** Normalizes a timestamp literal to ISO `yyyy-MM-ddTHH:mm:ss[…]`; a
+    * date-only literal takes midnight. */
+  private def isoDateTime(s: String): String =
+    (if (s.contains(" ") || s.contains("T")) s else s + " 00:00:00").replace(' ', 'T')
+
+  /** `v` as a value of type `t`: a string is parsed as a timestamp for a
+    * TIMESTAMP or TIMESTAMP_NTZ column, an integer widens to BIGINT or
+    * DOUBLE and prints for a STRING column; anything else passes as is. */
+  private[catalog] def coerce(v: Any, t: DataType): Any = (v, t) match {
+    case (null, _) => null
+    case (s: String, TimestampType) =>
+      // offset-suffixed literals ('…+01:00', '…Z') are absolute instants
+      // (the reference's timestamptz path, IcebergConnection.py:165-170);
+      // bare literals parse as UTC explicitly — Timestamp.valueOf would
+      // use the JVM default zone, shifting instants on non-UTC hosts
+      val txt = isoDateTime(s)
+      val instant =
+        if (txt.matches(".*(Z|[+-]\\d{2}:\\d{2})$"))
+          java.time.OffsetDateTime.parse(txt).toInstant
+        else java.time.LocalDateTime.parse(txt).toInstant(java.time.ZoneOffset.UTC)
+      java.sql.Timestamp.from(instant)
+    case (s: String, TimestampNTZType) =>
+      // zone-less wall-clock time: the type Spark reads parquet timestamps
+      // written without a time zone as
+      java.time.LocalDateTime.parse(isoDateTime(s))
+    case (i: Int, LongType) => i.toLong
+    case (i: Int, DoubleType) => i.toDouble
+    case (l: Long, DoubleType) => l.toDouble
+    case (i: Int, StringType) => i.toString
+    case (x, _) => x
+  }
 
   /** Does the (m, k, words) bloom possibly contain `value`? (True
     * negatives are proofs of absence; positives may be false.) */

@@ -609,23 +609,16 @@ class SqlGateway(spark: SparkSession, catalog: LakeCatalog) {
         Seq(s"Rolled back $nsName.$table to version $v").toDF("status")
 
       case insertTb(Lake(nsName, table), colSpec, values) =>
-        // the current schema, from the table's schema history
-        val schema = catalog.tableSchema(nsName, table)
+        // the literals as parsed: insertRow coerces them against the schema
+        // it reads anyway
         val parsed = parseValues(values)
-        val typed: Seq[Any] = Option(colSpec) match {
-          case None =>
-            require(parsed.length == schema.fields.length,
-              s"INSERT arity mismatch: ${parsed.length} values for ${schema.fields.length} columns in $nsName.$table")
-            parsed.zip(schema.fields.toSeq).map { case (v, f) => coerce(v, f.dataType) }
-          case Some(spec) => // column-spec insert: unlisted columns → null
-            val names = spec.split(",").map(_.trim)
-            require(names.length == parsed.length,
-              s"INSERT arity mismatch: ${parsed.length} values for ${names.length} listed columns")
-            val byName = names.zip(parsed).toMap
-            schema.fields.toSeq.map(f =>
-              byName.get(f.name).map(coerce(_, f.dataType)).orNull)
+        val row = Option(colSpec).fold(parsed) { spec => // unlisted columns → null
+          val names = spec.split(",").map(_.trim).toSeq
+          require(names.length == parsed.length,
+            s"INSERT arity mismatch: ${parsed.length} values for ${names.length} listed columns")
+          names.zip(parsed).map { case (n, v) => LakeCatalog.Named(n, v) }
         }
-        catalog.insertRow(nsName, table, typed)
+        catalog.insertRow(nsName, table, row)
         Seq("Inserted 1 row successfully").toDF("status")
 
       case countStar(alias, name) =>
@@ -653,34 +646,5 @@ class SqlGateway(spark: SparkSession, catalog: LakeCatalog) {
     val scope = new LakeScope(catalog)
     val text = scope.dialect(sql)
     scope.within(spark.sql(text))
-  }
-
-  /** Normalizes a timestamp literal to ISO `yyyy-MM-ddTHH:mm:ss[…]`; a
-    * date-only literal takes midnight. */
-  private def isoDateTime(s: String): String =
-    (if (s.contains(" ") || s.contains("T")) s else s + " 00:00:00").replace(' ', 'T')
-
-  private def coerce(v: Any, t: DataType): Any = (v, t) match {
-    case (null, _) => null
-    case (s: String, TimestampType) =>
-      // offset-suffixed literals ('…+01:00', '…Z') are absolute instants
-      // (the reference's timestamptz path, IcebergConnection.py:165-170);
-      // bare literals parse as UTC explicitly — Timestamp.valueOf would
-      // use the JVM default zone, shifting instants on non-UTC hosts
-      val txt = isoDateTime(s)
-      val instant =
-        if (txt.matches(".*(Z|[+-]\\d{2}:\\d{2})$"))
-          java.time.OffsetDateTime.parse(txt).toInstant
-        else java.time.LocalDateTime.parse(txt).toInstant(java.time.ZoneOffset.UTC)
-      java.sql.Timestamp.from(instant)
-    case (s: String, TimestampNTZType) =>
-      // zone-less wall-clock time: the type Spark reads parquet timestamps
-      // written without a time zone as
-      java.time.LocalDateTime.parse(isoDateTime(s))
-    case (i: Int, LongType) => i.toLong
-    case (i: Int, DoubleType) => i.toDouble
-    case (l: Long, DoubleType) => l.toDouble
-    case (i: Int, StringType) => i.toString
-    case (x, _) => x
   }
 }

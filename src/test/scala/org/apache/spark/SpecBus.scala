@@ -26,6 +26,11 @@ object SpecBus {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Starts now the processes a Spark JVM starts once, not per statement,
+    * so a spec can count the ones a statement starts: executor metrics
+    * read the page size with `getconf` the first time they are polled. */
+  def startOnceProcesses(): Unit = executor.ProcfsMetricsGetter.pTreeInfo
+
   /** The generated classes compiled while `f` runs: compiles happen only on
     * a miss in the generated-code cache, and each one records a compile time.
     * The count is JVM-wide, so `f` must be the only work running. */
